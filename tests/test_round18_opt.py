@@ -14,7 +14,7 @@ claims so a later refactor cannot silently break them:
 - `connected_components` runs ONE job per round via a lazy
   localCheckpoint; labels must stay exact and the returned relation
   must be checkpoint-rooted.
-- `_top_pc_state` mirrors the old in-plan NULL / NaN / div-by-zero
+- `_top_pc_state` mirrors Spark SQL's NULL / NaN / div-by-zero
   semantics in its driver-side power iteration (advisor r17 items).
 - `ensure_min_parallelism` probes (not skips) LogicalRDD-rooted plans.
 """
@@ -71,6 +71,17 @@ class TestLitVector:
             sim._dot_lit_expr("u", w).alias("fast"), slow.alias("slow")
         ).first()
         assert _bits(row["fast"]) == _bits(row["slow"])
+
+
+    def test_dot_lit_expr_nonfinite_fallback(self, spark):
+        assert sim._lit_vector_sql([1.0, math.nan]) is None
+        assert sim._lit_vector_sql([1.0, -math.inf]) is None
+        df = spark.createDataFrame([([2.0, 0.5],)], "u array<double>")
+        row = df.select(
+            sim._dot_lit_expr("u", [1.0, math.nan]).alias("n"),
+            sim._dot_lit_expr("u", [1.0, math.inf]).alias("i"),
+        ).first()
+        assert math.isnan(row["n"]) and row["i"] == math.inf
 
 
 class TestJlProjectExprFold:
@@ -176,12 +187,13 @@ class TestTopPcDegenerateInputs:
         )
         out = sim.embedding_top_pc(df, dim=4).collect()
         # dim rows + Rayleigh (0) + trace (-1); zero covariance → the
-        # iteration walks through 0/0 = NaN exactly like Spark doubles.
+        # iteration divides by a zero norm, which is NULL in Spark SQL
+        # (non-ANSI Divide) and DuckDB alike.
         assert len(out) == 6
         by_dim = {r["dim"]: r["loading"] for r in out}
         assert by_dim[-1] == 0.0  # trace of the zero matrix
         for d in (1, 2, 3, 4):
-            assert by_dim[d] is None or math.isnan(by_dim[d])
+            assert by_dim[d] is None
 
     def test_short_vectors_propagate_null(self, spark):
         # Vectors shorter than dim: element_at → NULL, every covariance

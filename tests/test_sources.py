@@ -1,13 +1,21 @@
 """S1/S2 source tier: Bronze JSON ingestion with inference, explicit
-schema, and Hive-partitioned layout pruning (B2S:141-151)."""
+schema, and Hive-partitioned layout pruning (B2S:141-151); the parquet
+footer-schema memo behind ``load_table``."""
 
 import json
 import os
+import sys
+import threading
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from yelp_data_pipeline_spark.tables import read_json_source
+from conftest import SF_DIR, normalize_events_ts
+from yelp_data_pipeline_spark import tables
+from yelp_data_pipeline_spark.tables import load_table, read_json_source
 
 
 def _write_json(path, rows):
@@ -133,3 +141,114 @@ def test_dynamic_partition_pruning_on_star_join(spark, tmp_path):
     assert "dynamicpruning" in plan.lower()
     # And the join result only touched the two KEEP regions.
     assert joined.select("region_k").distinct().count() == 2
+
+
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs fn submitted) via a one-off job group."""
+    sc = spark.sparkContext
+    group = f"schema-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "schema memo probe")
+    try:
+        out = fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_parquet(path, cols):
+    pq.write_table(pa.table({c: [1, 2, 3] for c in cols}), str(path))
+
+
+def test_schema_memo_second_load_submits_no_job(spark, tmp_path):
+    _write_parquet(tmp_path / "t.parquet", ["a", "b"])
+    first, n_first = _jobs_during(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    second, n_second = _jobs_during(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert n_first >= 1  # the footer-inference job
+    assert n_second == 0
+    assert second.schema == first.schema
+    # a fresh relation per call: a self-join still resolves both sides
+    j = first.alias("x").join(second.alias("y"), F.col("x.a") == F.col("y.a"))
+    assert j.count() == 3
+
+
+def test_schema_memo_rewritten_file_is_inferred_again(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, ["a"])
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    _write_parquet(path, ["a", "b", "c"])
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b", "c"]
+    assert df.count() == 3
+
+
+def test_schema_memo_fresh_session_infers_again(spark, tmp_path):
+    _write_parquet(tmp_path / "t.parquet", ["a"])
+    load_table(spark, str(tmp_path), "t")
+    other = spark.newSession()
+    df, n = _jobs_during(other, lambda: load_table(other, str(tmp_path), "t"))
+    assert n >= 1
+    assert df.columns == ["a"]
+
+
+def test_schema_memo_is_bounded_lru(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tables, "_SCHEMA_MEMO_MAX", 2)
+    other = spark.newSession()
+    for name in ("t0", "t1", "t2"):
+        _write_parquet(tmp_path / f"{name}.parquet", ["a"])
+        load_table(other, str(tmp_path), name)
+    memo = tables._schema_memo[other]
+    assert [k[0][0] for k in memo] == [
+        str(tmp_path / "t1.parquet"), str(tmp_path / "t2.parquet")
+    ]
+    _, n = _jobs_during(other, lambda: load_table(other, str(tmp_path), "t0"))
+    assert n >= 1  # evicted, so inferred again
+
+
+def test_schema_memo_concurrent_readers(spark, tmp_path):
+    """Driver threads share one session's memo: every reader must get
+    its own file's schema and the memo must hold one entry per file."""
+    cols = {f"t{i}": [f"c{j}" for j in range(i + 1)] for i in range(3)}
+    for name, cs in cols.items():
+        _write_parquet(tmp_path / f"{name}.parquet", cs)
+    other = spark.newSession()
+    bad = []
+
+    def reader(k):
+        for i in range(6):
+            name = f"t{(i + k) % 3}"
+            if load_table(other, str(tmp_path), name).columns != cols[name]:
+                bad.append(name)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert bad == []
+    assert len(tables._schema_memo[other]) == 3
+
+
+def test_schema_memo_directory_falls_back(spark, tmp_path):
+    d = tmp_path / "t.parquet"
+    spark.range(4).write.parquet(str(d))
+    assert tables._file_identity(str(d)) is None
+    assert tables._file_identity("file://" + str(d)) is None
+    assert load_table(spark, str(tmp_path), "t").count() == 4
+
+
+def test_schema_memo_hit_keeps_events_ts_micros(spark):
+    load_table(spark, SF_DIR, "events")
+    hit, n = _jobs_during(spark, lambda: load_table(spark, SF_DIR, "events"))
+    assert n == 0
+    assert dict(hit.dtypes)["ts"] == "timestamp"
+    plain = normalize_events_ts(spark.read.parquet(f"{SF_DIR}/events.parquet"))
+    agg = [F.min("ts"), F.max("ts"), F.sum(F.unix_micros("ts"))]
+    assert hit.agg(*agg).collect() == plain.agg(*agg).collect()

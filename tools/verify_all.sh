@@ -6,26 +6,29 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 1/7 oracle type audit (pandas-safe final projections) =="
+echo "== 1/8 oracle type audit (pandas-safe final projections) =="
 python tools/audit_oracle_types.py
 
-echo "== 2/7 full registry sweep vs DuckDB, ANSI ON, at $SF =="
+echo "== 2/8 full registry sweep vs DuckDB, ANSI ON, at $SF =="
 SPARK_GRAFT_ANSI=true python tools/check_oracle.py "$SF"
 
-echo "== 3/7 plan audit (default sweep: cartesian/NLJ classification) =="
+echo "== 3/8 plan audit (default sweep: cartesian/NLJ classification) =="
 python tools/audit_plans.py
 
-echo "== 4/7 pytest =="
+echo "== 4/8 pytest =="
 python -m pytest tests/ -x -q
 
-echo "== 5/7 degenerate-input gate (empty / one-row / ties sweeps) =="
+echo "== 5/8 degenerate-input gate (empty / one-row / ties sweeps) =="
 python tools/check_degenerate.py
 
-echo "== 6/7 partition-layout determinism sweep (local[5], 7 shuffle partitions) =="
+echo "== 6/8 partition-layout determinism sweep (local[5], 7 shuffle partitions) =="
 SPARK_GRAFT_CPUS=5 SPARK_SHUFFLE_PARTITIONS=7 SPARK_GRAFT_ANSI=true \
   python tools/check_oracle.py /root/testdata/sf0.001
 
-echo "== 7/7 bench (one JSON line) =="
+echo "== 7/8 perfbench self-tests =="
+python3 -m pytest perfbench -q
+
+echo "== 8/8 bench (one JSON line) =="
 python bench.py
 
 echo "ALL VERIFICATION STAGES GREEN"

@@ -28,10 +28,14 @@ from ..functions.vectors import cosine, dot, norm
 from ..session import ensure_min_parallelism
 
 
-def _lit_vector_sql(vec) -> str:
+def _lit_vector_sql(vec) -> str | None:
     """SQL text of a literal double array (exact repr round-trip —
-    see :func:`_lit_vector`)."""
-    return "array(" + ",".join(repr(float(x)) + "D" for x in vec) + ")"
+    see :func:`_lit_vector`), or None when an entry is non-finite:
+    inf/nan have no SQL literal."""
+    xs = [float(x) for x in vec]
+    if not all(math.isfinite(x) for x in xs):
+        return None
+    return "array(" + ",".join(repr(x) + "D" for x in xs) + ")"
 
 
 def _dot_lit_expr(vec_col_name: str, vec) -> F.Column:
@@ -44,9 +48,13 @@ def _dot_lit_expr(vec_col_name: str, vec) -> F.Column:
     the IDENTICAL expression tree functions.zip_with/aggregate build
     (same casts, same 0.0 seed, same left-to-right fold), so values
     and optimized plans are unchanged; only the construction path is
-    cheaper (~10ms/plane)."""
+    cheaper (~10ms/plane). A non-finite entry has no SQL literal, so
+    such a vector takes the Python-built form instead."""
+    lit_sql = _lit_vector_sql(vec)
+    if lit_sql is None:
+        return dot(F.col(vec_col_name), _lit_vector(vec))
     return F.expr(
-        f"aggregate(zip_with({vec_col_name}, {_lit_vector_sql(vec)}, "
+        f"aggregate(zip_with({vec_col_name}, {lit_sql}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "0.0D, (acc, x) -> acc + x)"
     )
@@ -67,10 +75,10 @@ def _lit_vector(vec) -> F.Column:
     (verified incl. exponent forms, -0.0, 5e300). Non-finite values
     (inf/nan) have no SQL literal — fall back to element-wise lits.
     """
-    xs = [float(x) for x in vec]
-    if all(math.isfinite(x) for x in xs):
-        return F.expr("array(" + ",".join(repr(x) + "D" for x in xs) + ")")
-    return F.array(*[F.lit(x).cast("double") for x in xs])
+    lit_sql = _lit_vector_sql(vec)
+    if lit_sql is not None:
+        return F.expr(lit_sql)
+    return F.array(*[F.lit(float(x)).cast("double") for x in vec])
 
 
 def _query_vector_lit(vec: list[float]) -> F.Column:
@@ -1413,20 +1421,15 @@ def _top_pc_state(
         by_i.setdefault(int(r["i"]), {})[int(r["j"])] = (
             None if r["c"] is None else float(r["c"])
         )
-    # Degenerate-input semantics mirror the previous IN-PLAN loop
-    # exactly (r18, advisor items): Spark's double arithmetic
-    # propagates NULL through + and *, divides by 0.0 the IEEE way
-    # (±Inf, 0/0 = NaN — doubles never ANSI-error), and its sort/
+    # Degenerate-input semantics follow Spark SQL's: double arithmetic
+    # propagates NULL through + and *, non-ANSI `Divide` returns NULL
+    # for a zero divisor (as DuckDB's `/` does), and the sort/
     # comparison order treats NaN as LARGER than any double. Python
     # floats raise on /0.0 and order NaN incoherently, so both get
     # explicit shims instead of bare operators.
     def _spark_div(a, b):
-        if a is None or b is None:
+        if a is None or b is None or b == 0.0:
             return None
-        if b == 0.0:
-            if a == 0.0 or math.isnan(a):
-                return math.nan
-            return math.copysign(math.inf, a)
         return a / b
 
     def _spark_abs_key(x):
@@ -1642,19 +1645,10 @@ def jl_project(
     """
     m = jl_matrix(out_dim, in_dim)
     scale = 1.0 / math.sqrt(out_dim)
-    # One F.expr parse per component (same lambda-creation economy as
-    # _dot_lit_expr; the sign entries are exact ±1.0 doubles, so the
-    # CAST-free `x * s` of the previous zip_with is reproduced with s
-    # already double).
-    comps = [
-        F.expr(
-            f"aggregate(zip_with({vec_col}, {_lit_vector_sql(m[j])}, "
-            "(x, s) -> CAST(x AS DOUBLE) * s), "
-            "0.0D, (a, x) -> a + x)"
-        )
-        * F.lit(scale)
-        for j in range(out_dim)
-    ]
+    # One F.expr parse per component via _dot_lit_expr; the sign
+    # entries are exact ±1.0 doubles, so its CAST of the literal side is
+    # a no-op and the products equal the element-wise `x * s` fold.
+    comps = [_dot_lit_expr(vec_col, m[j]) * F.lit(scale) for j in range(out_dim)]
     return df.withColumn(out_col, F.array(*comps))
 
 

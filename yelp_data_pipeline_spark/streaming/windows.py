@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import read_parquet
+
 
 def with_watermark(df: DataFrame, ts_col: str, delay: str = "10 minutes") -> DataFrame:
     return df.withWatermark(ts_col, delay)
@@ -80,7 +82,7 @@ def stream_events_from_parquet(
     Applies the same TIMESTAMP(NANOS)→microsecond conversion as the
     batch source layer (tables.py) so watermarks see a timestamp."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/{table}.parquet").schema
     # FileStreamSource requires a directory path: stream the fixture dir
     # with a glob pinned to this table's file.
     df = (

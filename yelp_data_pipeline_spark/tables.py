@@ -5,11 +5,32 @@ driver fixtures: explicit-schema columnar scans with Catalyst pushdown.
 The reference's Hive-style partition-path reads
 (bronze_to_silver_on_minio.py:143-151) become partition-column
 predicates here so pruning happens in the optimizer, not in path math.
+
+Every fixture-table read goes through :func:`read_parquet`, which
+memoizes each file's footer schema so only the first read of a file
+pays Spark's schema-inference job:
+
+- key: the file's identity (absolute path, size, ``mtime_ns``, inode —
+  a file rewritten in place is inferred again) plus the session (one
+  memo per ``SparkSession`` object, and the parquet-inference confs in
+  ``_INFERENCE_CONFS`` are part of the key);
+- fallback: a path that is not a local regular file (a directory, a
+  URI, a glob, a failed ``stat``) is read with plain
+  ``spark.read.parquet`` and nothing is memoized;
+- fresh relation per call: only the ``StructType`` is memoized, never
+  the DataFrame, so self-joins (nation n1/n2) still get distinct
+  attribute ids;
+- bounded: at most ``_SCHEMA_MEMO_MAX`` schemas per session (LRU).
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import weakref
+from collections import OrderedDict
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,11 +46,66 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TS_NANOS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+# SQL confs that change the schema parquet inference returns for a file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_MEMO_MAX = 256
+_schema_memo: weakref.WeakKeyDictionary[SparkSession, OrderedDict] = (
+    weakref.WeakKeyDictionary()
+)
+_schema_memo_lock = threading.Lock()
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(abspath, size, mtime_ns, inode) of a local regular file, else None."""
+    if urlparse(path).scheme:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_size, st.st_mtime_ns, st.st_ino)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job on
+    repeat reads: the first read of a local file infers its footer
+    schema (one Spark job) and memoizes it; later reads of the same
+    file in the same session pass it to ``spark.read.schema(s)``. The
+    returned relation is new on every call (see the module docstring
+    for the memo's key and fallback)."""
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (ident, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    with _schema_memo_lock:
+        memo = _schema_memo.setdefault(spark, OrderedDict())
+        schema = memo.get(key)
+        if schema is not None:
+            memo.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_memo_lock:
+        memo[key] = df.schema
+        if len(memo) > _SCHEMA_MEMO_MAX:
+            memo.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one table; column pruning / predicate pushdown
     are preserved because nothing is materialized here."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for c in TS_NANOS_COLS.get(name, ()):
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
             # integer div keeps exactness (float div loses sub-µs bits at 2^60)
