@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -37,3 +38,17 @@ def normalize_events_ts(df, ts_col="ts"):
     if t == "timestamp_ntz":
         return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df
+
+
+def jobs_during(spark, fn):
+    """(fn(), number of Spark jobs fn submitted) via a one-off job group."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -6,11 +6,31 @@ properties Airflow retries rely on: rerun idempotence (month M twice
 
 import json
 import os
+import shutil
+import threading
+import time
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
 
+from conftest import jobs_during
+from yelp_data_pipeline_spark import __main__ as cli
 from yelp_data_pipeline_spark import pipelines
+from yelp_data_pipeline_spark import session as session_mod
+
+# Rows each task writes per month on the ``bronze`` fixture: the two
+# businesses and the one user are full tables; each month holds one
+# review, one tip and one check-in timestamp. Month 1's review and
+# check-in share a date (dim_time 1 row), months 2-3 do not (2 rows);
+# the bridge keeps b1's Food + Cafes and b2's Bars.
+B2S_ROWS = {"business": 2, "users": 1, "checkins": 1, "reviews": 1, "tips": 1}
+S2G_ROWS = {
+    m: {"dim_time": dt, "dim_business": 2, "dim_user": 1,
+        "bridge_business_category": 3, "fact_review": 1, "fact_checkin": 1}
+    for m, dt in ((1, 1), (2, 2), (3, 2))
+}
+MONTH_SCOPED = {"checkins", "reviews", "tips", "dim_time", "fact_review", "fact_checkin"}
 
 
 def _w(path, rows):
@@ -151,3 +171,141 @@ def test_backfill_retries_then_aborts(spark, bronze, tmp_path):
             retries=1, _s2g=always_fails,
         )
     assert not os.path.exists(g2)  # month 2 never started downstream
+
+
+def test_backfill_rows_match_ground_truth_and_written_tables(spark, bronze, tmp_path):
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    summary = pipelines.backfill(spark, bronze, silver, gold, (2021, 1), (2021, 3))
+    for rec in summary:
+        m = rec["month"]
+        if rec["task"] == "bronze_to_silver":
+            root, want = silver, B2S_ROWS
+        else:
+            root, want = gold, S2G_ROWS[m]
+        assert rec["rows"] == want, (m, rec["task"])
+        for table, n in rec["rows"].items():
+            df = spark.read.parquet(f"{root}/{table}")
+            if table in MONTH_SCOPED:
+                df = df.filter((F.col("year") == 2021) & (F.col("month") == m))
+            assert df.count() == n, (m, table)
+
+
+def test_backfill_summary_submits_no_spark_job(spark, bronze, tmp_path):
+    """Row counts ride on the writes: every job of a backfill belongs to
+    a task, none to the summary backfill builds afterwards."""
+    sc = spark.sparkContext
+    task_group = f"tasks-{uuid.uuid4().hex}"
+
+    def in_task_group(task):
+        def call(*args):
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(task_group, "backfill task")
+            try:
+                return task(*args)
+            finally:
+                sc.setJobGroup(outer, "job count probe")
+        return call
+
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    summary, outside_tasks = jobs_during(spark, lambda: pipelines.backfill(
+        spark, bronze, silver, gold, (2021, 1), (2021, 2),
+        _b2s=in_task_group(pipelines.bronze_to_silver),
+        _s2g=in_task_group(pipelines.silver_to_gold),
+    ))
+    assert len(summary) == 4
+    assert outside_tasks == 0
+    assert len(sc.statusTracker().getJobIdsForGroup(task_group)) > 0
+
+
+def test_concurrent_writes_carry_the_callers_job_group(spark, bronze, tmp_path):
+    """Every b2s job is submitted from a worker thread; each of the five
+    writes must still land in the caller's job group."""
+    rows, jobs = jobs_during(spark, lambda: pipelines.bronze_to_silver(
+        spark, bronze, str(tmp_path / "silver"), 2021, 1))
+    assert rows == B2S_ROWS
+    assert jobs >= len(B2S_ROWS)
+
+
+def test_month_without_checkins_reports_zero(spark, bronze, tmp_path):
+    """An empty write still completes its Observation (count 0), so the
+    task neither hangs nor reports a stale count."""
+    src = str(tmp_path / "bronze")
+    shutil.copytree(bronze, src)
+    _w(f"{src}/review/year=2021/month=4/r.json", [
+        {"review_id": "r4", "user_id": "u1", "business_id": "b2",
+         "stars": 2, "useful": 0, "funny": 0, "cool": 0,
+         "text": "meh", "date": "2021-04-09 12:00:00"}])
+    _w(f"{src}/tip/year=2021/month=4/t.json", [
+        {"user_id": "u1", "business_id": "b2", "text": "tip",
+         "compliment_count": 0, "date": "2021-04-03 09:00:00"}])
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    box = {}
+    # Month 3 first: silver/checkins must exist before s2g can read it.
+    t = threading.Thread(
+        target=lambda: box.update(summary=pipelines.backfill(
+            spark, src, silver, gold, (2021, 3), (2021, 4))),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "backfill hung on an empty write"
+    b2s, s2g = box["summary"][2:]
+    assert (b2s["month"], s2g["month"]) == (4, 4)
+    assert b2s["rows"] == {**B2S_ROWS, "checkins": 0}
+    assert s2g["rows"] == {"dim_time": 1, "dim_business": 2, "dim_user": 1,
+                           "bridge_business_category": 3, "fact_review": 1,
+                           "fact_checkin": 0}
+
+
+def test_run_concurrently_waits_for_every_thunk_before_raising(spark):
+    done = []
+
+    def bad():
+        raise RuntimeError("boom")
+
+    def slow():
+        time.sleep(1.0)
+        done.append("slow")
+        return 1
+
+    with pytest.raises(RuntimeError, match="boom"):
+        pipelines._run_concurrently(spark, {"bad": bad, "slow": slow})
+    assert done == ["slow"]
+
+
+def test_run_concurrently_runs_thunks_at_once(spark):
+    # Each thunk waits for the other: a serial runner would time out.
+    barrier = threading.Barrier(2, timeout=30)
+
+    def meet(n):
+        barrier.wait()
+        return n
+
+    got = pipelines._run_concurrently(spark, {"a": lambda: meet(1), "b": lambda: meet(2)})
+    assert got == {"a": 1, "b": 2}
+
+
+def test_cli_pipeline_commands_print_row_counts(spark, bronze, tmp_path, monkeypatch, capsys):
+    monkeypatch.setattr(session_mod, "get_spark", lambda *a, **k: spark)
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    try:
+        assert cli.main(["b2s", "--bronze", bronze, "--silver", silver,
+                         "--year", "2021", "--month", "1"]) == 0
+        assert capsys.readouterr().out.splitlines() == [
+            f"{t}: {n} rows" for t, n in B2S_ROWS.items()]
+
+        assert cli.main(["s2g", "--silver", silver, "--gold", gold,
+                         "--year", "2021", "--month", "1"]) == 0
+        assert capsys.readouterr().out.splitlines() == [
+            f"{t}: {n} rows" for t, n in S2G_ROWS[1].items()]
+
+        assert cli.main(["backfill", "--bronze", bronze, "--silver", silver,
+                         "--gold", gold, "--start", "2021-02", "--end", "2021-03"]) == 0
+        want = []
+        for m in (2, 3):
+            for task, rows in (("bronze_to_silver", B2S_ROWS), ("silver_to_gold", S2G_ROWS[m])):
+                counts = ", ".join(f"{t}={n}" for t, n in rows.items())
+                want.append(f"2021-{m:02d} {task} (attempt 1): {counts}")
+        assert capsys.readouterr().out.splitlines() == want
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")

@@ -6,14 +6,13 @@ import json
 import os
 import sys
 import threading
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from conftest import SF_DIR, normalize_events_ts
+from conftest import SF_DIR, jobs_during as _jobs_during, normalize_events_ts
 from yelp_data_pipeline_spark import tables
 from yelp_data_pipeline_spark.tables import load_table, read_json_source
 
@@ -141,20 +140,6 @@ def test_dynamic_partition_pruning_on_star_join(spark, tmp_path):
     assert "dynamicpruning" in plan.lower()
     # And the join result only touched the two KEEP regions.
     assert joined.select("region_k").distinct().count() == 2
-
-
-def _jobs_during(spark, fn):
-    """(fn(), number of Spark jobs fn submitted) via a one-off job group."""
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "schema memo probe")
-    try:
-        out = fn()
-    finally:
-        for k in ("spark.jobGroup.id", "spark.job.description",
-                  "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(k, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _write_parquet(path, cols):

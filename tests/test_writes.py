@@ -61,6 +61,23 @@ def test_static_overwrite_replaces_whole_table(spark, tmp_path):
     assert [r["id"] for r in spark.read.parquet(path).collect()] == [9]
 
 
+def test_write_partitioned_leaves_session_conf_untouched(spark, tmp_path):
+    """The overwrite mode is a per-write option: neither mode may leak
+    into the session, whichever mode the session itself holds."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    path = str(tmp_path / "t")
+    try:
+        for session_mode, dynamic in (("dynamic", False), ("static", True)):
+            spark.conf.set(key, session_mode)
+            up.write_partitioned(
+                _frame(spark, [(1, "a", 2020, 1)]), path, ["year", "month"], dynamic=dynamic
+            )
+            assert spark.conf.get(key) == session_mode
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_schema_evolving_overwrite(spark, tmp_path):
     # S8 — overwriteSchema semantics on the parquet fallback
     path = str(tmp_path / "t")

@@ -4,6 +4,10 @@
     python -m yelp_data_pipeline_spark run <query> [--sf-dir D] [--show N | --out PATH]
     python -m yelp_data_pipeline_spark b2s --bronze B --silver S --year Y --month M
     python -m yelp_data_pipeline_spark s2g --silver S --gold G --year Y --month M
+    python -m yelp_data_pipeline_spark backfill --bronze B --silver S --gold G --start YYYY-MM --end YYYY-MM
+    python -m yelp_data_pipeline_spark curate --out PATH [--sf-dir D]
+
+The pipeline commands print the rows each task wrote, per table.
 """
 
 from __future__ import annotations
@@ -107,15 +111,15 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "b2s":
-        out = pipelines.bronze_to_silver(
+        rows = pipelines.bronze_to_silver(
             spark, args.bronze, args.silver, args.year, args.month
         )
     else:
-        out = pipelines.silver_to_gold(
+        rows = pipelines.silver_to_gold(
             spark, args.silver, args.gold, args.year, args.month
         )
-    for name, df in out.items():
-        print(f"{name}: {df.count()} rows")
+    for name, n in rows.items():
+        print(f"{name}: {n} rows")
     return 0
 
 

@@ -232,6 +232,11 @@ def edit_distance_pairs(
     distance, and the exact verify guarantees no false positives.
 
     Output: (doc_a, doc_b, distance) with distance ≤ max_distance.
+
+    ``id_col`` must be unique in ``df``: the texts join back onto the
+    candidate pairs by id, so a repeated id fans each of its pairs out
+    once per text carrying that id (duplicate output rows, and
+    distances between whichever texts share the id).
     """
     # SLIM blocking relation: (doc, min-shingle) only. The full text
     # previously rode along through BOTH self-join sides and the

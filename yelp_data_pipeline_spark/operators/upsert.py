@@ -194,17 +194,21 @@ def write_partitioned(
 ) -> None:
     """S6/S7 — partitioned sink with dynamic partition overwrite
     (B2S:168-185; conf at B2S:132): only partitions present in the
-    batch are replaced, the monthly-incremental idiom."""
-    spark = df.sparkSession
-    # Set the mode EXPLICITLY both ways: the conf is session-sticky, so
-    # a static-overwrite caller after a dynamic one would otherwise
-    # silently inherit dynamic semantics (an empty batch would then
-    # overwrite nothing and leave stale partitions on disk).
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode",
-        "dynamic" if dynamic else "static",
+    batch are replaced, the monthly-incremental idiom.
+
+    The mode goes on the writer as the ``partitionOverwriteMode``
+    option, set explicitly both ways, and never into the session conf:
+    a session-wide setting would leak into every later write (a static
+    caller after a dynamic one would overwrite nothing on an empty
+    batch and leave stale partitions on disk), and writers running on
+    concurrent driver threads would race on it."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .partitionBy(*partition_cols)
+        .format(fmt)
+        .save(path)
     )
-    df.write.mode("overwrite").partitionBy(*partition_cols).format(fmt).save(path)
 
 
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:

@@ -12,6 +12,14 @@ schema.png table the reference declares but never builds —
 bridge_business_category, fact_review, fact_checkin), with MERGE
 upsert semantics on the keyed tables.
 
+Both jobs return ``{table: rows written}``. The tables of one job do
+not depend on each other (the facts join dim_time's *plan*, not the
+file it writes), so each job runs its writes concurrently on driver
+threads; a job's one Spark job per table then shares the cores
+instead of queueing behind the previous write. Row counts come from
+an ``Observation`` on each write, so they ride on the write's own job
+rather than re-executing the plan.
+
 Storage is parquet (the harness has no Delta jars); the writers go
 through operators/upsert.py, whose Delta paths activate when
 delta-spark is importable. Month parameters drive partition-column
@@ -21,8 +29,13 @@ predicates, never path arithmetic (the reference's S4 anti-pattern).
 from __future__ import annotations
 
 import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import cleaning as cl
@@ -31,58 +44,89 @@ from .operators.aggregates import group_count
 from .operators.upsert import merge_upsert_df, write_partitioned
 from .tables import read_json_source
 
-SILVER_PARTITIONED = ("checkins", "reviews", "tips")
+_MONTH_PARTS = ["year", "month"]
 
 
 def _write_overwrite(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
+def _counted(write: Callable[..., None], df: DataFrame, *args) -> int:
+    """``write(df, *args)``, returning the number of rows it wrote.
+
+    The count is an ``Observation`` on the written plan: it is collected
+    by the write's own job, never by a second pass over the data."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")), *args)
+    return obs.get["rows"]
+
+
+def _run_concurrently(
+    spark: SparkSession, thunks: dict[str, Callable[[], int]]
+) -> dict[str, int]:
+    """Run independent table writes on driver threads; ``{table: rows}``.
+
+    Each thunk inherits the caller's Spark local properties (job group,
+    job description), so its jobs are attributed to the calling task.
+    Every thunk finishes before the first error (in ``thunks`` order)
+    is re-raised: a retry of the task must never overlap a write of the
+    failed attempt that is still running.
+    """
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(thunk))
+            for name, thunk in thunks.items()
+        }
+    # Leaving the with-block waited for every thunk.
+    return {name: f.result() for name, f in futures.items()}
+
+
 def bronze_to_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str, year: int, month: int
-) -> dict[str, DataFrame]:
-    """Monthly Bronze→Silver job. Returns the written Silver frames."""
-    out: dict[str, DataFrame] = {}
+) -> dict[str, int]:
+    """Monthly Bronze→Silver job: writes the five Silver tables
+    concurrently and returns ``{table: rows written}``."""
+    month_pred = (F.col("year") == year) & (F.col("month") == month)
 
-    business = read_json_source(spark, f"{bronze_dir}/business")
-    out["business"] = cl.process_business(business)
-    _write_overwrite(out["business"], f"{silver_dir}/business")
+    def full(table: str, src: str, clean: Callable[[DataFrame], DataFrame]) -> int:
+        df = clean(read_json_source(spark, f"{bronze_dir}/{src}"))
+        return _counted(_write_overwrite, df, f"{silver_dir}/{table}")
 
-    users = read_json_source(spark, f"{bronze_dir}/user")
-    out["users"] = cl.process_users(users)
-    _write_overwrite(out["users"], f"{silver_dir}/users")
+    def checkins() -> int:
+        raw = read_json_source(spark, f"{bronze_dir}/checkin")
+        df = cl.process_checkins(raw).filter(month_pred)
+        return _counted(write_partitioned, df, f"{silver_dir}/checkins", _MONTH_PARTS)
 
-    checkins = cl.process_checkins(read_json_source(spark, f"{bronze_dir}/checkin"))
-    out["checkins"] = checkins.filter(
-        (F.col("year") == year) & (F.col("month") == month)
-    )
-    write_partitioned(out["checkins"], f"{silver_dir}/checkins", ["year", "month"])
-
-    for entity, src in (("reviews", "review"), ("tips", "tip")):
-        raw = read_json_source(
-            spark,
-            f"{bronze_dir}/{src}",
-            partition_filter=(F.col("year") == year) & (F.col("month") == month),
-        )
+    def dated(table: str, src: str) -> int:
+        raw = read_json_source(spark, f"{bronze_dir}/{src}", partition_filter=month_pred)
         # bronze partition dirs provide (year, month); the cleaner
         # re-derives them from the payload date (B2S:108-111)
-        dated = cl.add_event_date_parts(raw.drop("year", "month"), "date")
-        out[entity] = dated
-        write_partitioned(dated, f"{silver_dir}/{entity}", ["year", "month"])
-    return out
+        df = cl.add_event_date_parts(raw.drop("year", "month"), "date")
+        return _counted(write_partitioned, df, f"{silver_dir}/{table}", _MONTH_PARTS)
+
+    return _run_concurrently(
+        spark,
+        {
+            "business": partial(full, "business", "business", cl.process_business),
+            "users": partial(full, "users", "user", cl.process_users),
+            "checkins": checkins,
+            "reviews": partial(dated, "reviews", "review"),
+            "tips": partial(dated, "tips", "tip"),
+        },
+    )
 
 
 def silver_to_gold(
     spark: SparkSession, silver_dir: str, gold_dir: str, year: int, month: int
-) -> dict[str, DataFrame]:
-    """Monthly Silver→Gold job. Returns the written Gold frames."""
+) -> dict[str, int]:
+    """Monthly Silver→Gold job: builds the six Gold plans, writes them
+    concurrently and returns ``{table: rows written}`` (for the MERGE
+    tables, the rows of the whole merged table)."""
     month_pred = (F.col("year") == year) & (F.col("month") == month)
     reviews = spark.read.parquet(f"{silver_dir}/reviews").filter(month_pred)
     checkins = spark.read.parquet(f"{silver_dir}/checkins").filter(month_pred)
     business = spark.read.parquet(f"{silver_dir}/business")
     users = spark.read.parquet(f"{silver_dir}/users")
-
-    out: dict[str, DataFrame] = {}
 
     # dim_time — month-scoped (S2G:18-35; date_id restarts per month,
     # SURVEY §5 caveat), union of review + checkin dates
@@ -92,8 +136,6 @@ def silver_to_gold(
         .distinct()
     )
     dim_time = dims.build_dim_time(dates)
-    out["dim_time"] = dim_time
-    write_partitioned(dim_time, f"{gold_dir}/dim_time", ["year", "month"])
 
     # dim_business / dim_user — MERGE upsert on the natural key
     dim_business = dims.project_dim(
@@ -111,7 +153,6 @@ def silver_to_gold(
             "stars": "stars_avg",
         },
     )
-    out["dim_business"] = _upsert(spark, dim_business, f"{gold_dir}/dim_business", ["business_id"])
 
     dim_user = dims.project_dim(
         users,
@@ -129,7 +170,6 @@ def silver_to_gold(
             "friends_count": "friends_count",
         },
     )
-    out["dim_user"] = _upsert(spark, dim_user, f"{gold_dir}/dim_user", ["user_id"])
 
     # bridge — explode categories, dictionary-encode, distinct pairs
     exploded = cl.explode_csv(
@@ -147,9 +187,6 @@ def silver_to_gold(
         .select("business_id", "category_id", "category_name")
         .distinct()
     )
-    out["bridge_business_category"] = _upsert(
-        spark, bridge, f"{gold_dir}/bridge_business_category", ["business_id", "category_id"]
-    )
 
     # facts — measures ⟕ dim_time, partitioned dynamic overwrite
     fact_review = facts.attach_date_dim(
@@ -161,8 +198,6 @@ def silver_to_gold(
         "business_id", "user_id", "date_id", "year", "month",
         "stars", "useful", "funny", "cool",
     )
-    out["fact_review"] = fact_review
-    write_partitioned(fact_review, f"{gold_dir}/fact_review", ["year", "month"])
 
     daily = group_count(
         checkins.select("business_id", F.to_date("date").alias("date")),
@@ -172,33 +207,48 @@ def silver_to_gold(
     fact_checkin = facts.attach_date_dim(
         daily, dim_time, F.col("date"), dim_cols=("date_id", "year", "month")
     ).select("business_id", "date_id", "year", "month", "checkin_count")
-    out["fact_checkin"] = fact_checkin
-    write_partitioned(fact_checkin, f"{gold_dir}/fact_checkin", ["year", "month"])
-    return out
+
+    def partitioned(table: str, df: DataFrame) -> Callable[[], int]:
+        return partial(_counted, write_partitioned, df, f"{gold_dir}/{table}", _MONTH_PARTS)
+
+    def upsert(table: str, df: DataFrame, keys: list[str]) -> Callable[[], int]:
+        return partial(_upsert, spark, df, f"{gold_dir}/{table}", keys)
+
+    return _run_concurrently(
+        spark,
+        {
+            "dim_time": partitioned("dim_time", dim_time),
+            "dim_business": upsert("dim_business", dim_business, ["business_id"]),
+            "dim_user": upsert("dim_user", dim_user, ["user_id"]),
+            "bridge_business_category": upsert(
+                "bridge_business_category", bridge, ["business_id", "category_id"]
+            ),
+            "fact_review": partitioned("fact_review", fact_review),
+            "fact_checkin": partitioned("fact_checkin", fact_checkin),
+        },
+    )
 
 
-def _upsert(spark: SparkSession, updates: DataFrame, path: str, keys: list[str]) -> DataFrame:
+def _upsert(spark: SparkSession, updates: DataFrame, path: str, keys: list[str]) -> int:
     """S9 MERGE semantics on a parquet table: create-if-absent, else
     updates ∪ (target anti-join updates) rewritten (the Delta MERGE
     branch in operators/upsert.py takes over when delta is present).
+    Returns the row count of the table as written.
 
     The rewrite goes through a staging directory + rename: you cannot
     overwrite a parquet path while a lazy plan still reads it, and a
     driver-side collect would not scale. (Delta does this swap
     transactionally; staging+rename is the filesystem stand-in.)
     """
-    import shutil
-
-    if os.path.isdir(path):
-        target = spark.read.parquet(path)
-        merged = merge_upsert_df(target, updates.select(*target.columns), keys)
-        staging = path + "__staging"
-        _write_overwrite(merged, staging)
-        shutil.rmtree(path)
-        os.rename(staging, path)
-    else:
-        _write_overwrite(updates, path)
-    return spark.read.parquet(path)
+    if not os.path.isdir(path):
+        return _counted(_write_overwrite, updates, path)
+    target = spark.read.parquet(path)
+    merged = merge_upsert_df(target, updates.select(*target.columns), keys)
+    staging = path + "__staging"
+    rows = _counted(_write_overwrite, merged, staging)
+    shutil.rmtree(path)
+    os.rename(staging, path)
+    return rows
 
 
 def month_range(
@@ -241,7 +291,9 @@ def backfill(
       upserts fold month N's dims into month N-1's table state, so
       two months racing would lose updates;
     - ``bronze_to_silver >> silver_to_gold`` → task order within a
-      month; a month's s2g never starts before its b2s committed;
+      month; a month's s2g never starts before its b2s committed.
+      Inside a task the table writes run concurrently, and a task
+      returns (or raises) only once every one of its writes ended;
     - ``retries: 1`` → each task re-attempts ``retries`` times on
       failure before the backfill aborts (remaining months DON'T run
       — Airflow's depends-on-failed-upstream posture for a linear
@@ -254,7 +306,9 @@ def backfill(
     twin (same keys → same survivors). Verified in
     tests/test_backfill.py by table-state equality.
 
-    Returns one summary dict per (month, task) with row counts.
+    Returns one summary dict per (month, task); its ``rows`` is the
+    task's ``{table: rows written}``, observed on the writes themselves
+    (the summary submits no Spark job of its own).
     """
     b2s = _b2s or bronze_to_silver
     s2g = _s2g or silver_to_gold
@@ -267,7 +321,7 @@ def backfill(
             attempt = 0
             while True:
                 try:
-                    out = task(spark, src, dst, year, month)
+                    rows = task(spark, src, dst, year, month)
                     break
                 except Exception:
                     attempt += 1
@@ -279,7 +333,7 @@ def backfill(
                     "month": month,
                     "task": task_name,
                     "attempts": attempt + 1,
-                    "rows": {name: df.count() for name, df in out.items()},
+                    "rows": rows,
                 }
             )
     return summary

@@ -54,7 +54,13 @@ def release_tracked(blocking: bool = False) -> int:
     consuming action first, release once at the end of the unit of
     work. For concurrent-session deployments, scope tracking per
     driver (snapshot ``_TRACKED_PERSISTS[:]`` before building, release
-    only that slice) rather than sharing this global."""
+    only that slice) rather than sharing this global.
+
+    Only :func:`track_persist` relations are released. Blocks of a
+    ``localCheckpoint`` — :func:`cut_lineage` and the connected-
+    components rounds in operators/graph.py — are not tracked here:
+    they stay until their RDD is garbage-collected or the session
+    stops."""
     n = 0
     while _TRACKED_PERSISTS:
         df = _TRACKED_PERSISTS.pop()
