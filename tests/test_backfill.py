@@ -226,9 +226,14 @@ def test_concurrent_writes_carry_the_callers_job_group(spark, bronze, tmp_path):
     assert jobs >= len(B2S_ROWS)
 
 
-def test_month_without_checkins_reports_zero(spark, bronze, tmp_path):
-    """An empty write still completes its Observation (count 0), so the
-    task neither hangs nor reports a stale count."""
+# Month 4 of ``_bronze_with_april``: a review and a tip, no check-in.
+APRIL_S2G_ROWS = {"dim_time": 1, "dim_business": 2, "dim_user": 1,
+                  "bridge_business_category": 3, "fact_review": 1,
+                  "fact_checkin": 0}
+
+
+def _bronze_with_april(bronze, tmp_path):
+    """A copy of ``bronze`` plus 2021-04, a month with no check-ins."""
     src = str(tmp_path / "bronze")
     shutil.copytree(bronze, src)
     _w(f"{src}/review/year=2021/month=4/r.json", [
@@ -238,6 +243,13 @@ def test_month_without_checkins_reports_zero(spark, bronze, tmp_path):
     _w(f"{src}/tip/year=2021/month=4/t.json", [
         {"user_id": "u1", "business_id": "b2", "text": "tip",
          "compliment_count": 0, "date": "2021-04-03 09:00:00"}])
+    return src
+
+
+def test_month_without_checkins_reports_zero(spark, bronze, tmp_path):
+    """An empty write still completes its Observation (count 0), so the
+    task neither hangs nor reports a stale count."""
+    src = _bronze_with_april(bronze, tmp_path)
     silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
     box = {}
     # Month 3 first: silver/checkins must exist before s2g can read it.
@@ -252,9 +264,18 @@ def test_month_without_checkins_reports_zero(spark, bronze, tmp_path):
     b2s, s2g = box["summary"][2:]
     assert (b2s["month"], s2g["month"]) == (4, 4)
     assert b2s["rows"] == {**B2S_ROWS, "checkins": 0}
-    assert s2g["rows"] == {"dim_time": 1, "dim_business": 2, "dim_user": 1,
-                           "bridge_business_category": 3, "fact_review": 1,
-                           "fact_checkin": 0}
+    assert s2g["rows"] == APRIL_S2G_ROWS
+
+
+def test_first_month_without_checkins_on_fresh_warehouse(spark, bronze, tmp_path):
+    """The empty dynamic-overwrite write leaves silver/checkins with no
+    data file to infer a schema from; s2g must read it as empty."""
+    src = _bronze_with_april(bronze, tmp_path)
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    b2s, s2g = pipelines.backfill(spark, src, silver, gold, (2021, 4), (2021, 4))
+    assert (b2s["attempts"], s2g["attempts"]) == (1, 1)
+    assert b2s["rows"] == {**B2S_ROWS, "checkins": 0}
+    assert s2g["rows"] == APRIL_S2G_ROWS
 
 
 def test_run_concurrently_waits_for_every_thunk_before_raising(spark):

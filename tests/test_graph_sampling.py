@@ -170,6 +170,23 @@ def test_star_cc_handles_chain_beyond_hashmin_budget(spark):
     assert len(labels) == 61
 
 
+def test_star_cc_raises_when_max_iter_exhausted(spark):
+    import pytest
+
+    chain = [(i, i + 1) for i in range(100, 160)]
+    df = spark.createDataFrame(chain, "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components_star(df, "doc_a", "doc_b", max_iter=1)
+
+
+def test_star_cc_rejects_nonpositive_max_iter(spark):
+    import pytest
+
+    df = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    with pytest.raises(ValueError, match="max_iter"):
+        graph.connected_components_star(df, "doc_a", "doc_b", max_iter=0)
+
+
 def test_mixture_resampling_hits_target_proportions(spark):
     # 1000 web, 300 code, 50 books; targets 50/30/20. books is the
     # binding source: T = 50/0.2 = 250 -> keep 125 web, 75 code, all 50.

@@ -207,59 +207,6 @@ class TestVideoOffsetTolerant:
             assert omf >= mf
 
 
-class TestStarPrepass:
-    def test_prepass_labels_equal_plain_star(self, spark):
-        """Hash-min contraction pre-pass must not change the labeling:
-        adversarial chain + cliques + isolated-pair graph, every
-        prepass_rounds value agrees with the plain star loop."""
-        from yelp_data_pipeline_spark.operators.graph import (
-            connected_components_star,
-        )
-
-        edges = []
-        # long chain 0-1-2-...-30 (diameter 30: survives the pre-pass)
-        edges += [(i, i + 1) for i in range(30)]
-        # clique 100..104 (collapses in 1 hash-min round)
-        edges += [(a, b) for a in range(100, 105) for b in range(a + 1, 105)]
-        # star 200 center (collapses immediately)
-        edges += [(200, x) for x in range(201, 208)]
-        # isolated pair
-        edges += [(300, 301)]
-        df = spark.createDataFrame(edges, "src long, dst long")
-
-        want = {
-            (r["node"], r["cluster"])
-            for r in connected_components_star(df).collect()
-        }
-        for k in (1, 3):
-            got = {
-                (r["node"], r["cluster"])
-                for r in connected_components_star(
-                    df, prepass_rounds=k
-                ).collect()
-            }
-            assert got == want, f"prepass_rounds={k} diverged"
-        # sanity: chain labels to 0, clique to 100, star to 200
-        d = dict(want)
-        assert d[30] == 0 and d[104] == 100 and d[207] == 200 and d[301] == 300
-
-    def test_prepass_fully_collapsed_graph(self, spark):
-        """A graph that collapses entirely in the pre-pass (no residual
-        edges) must still label every node."""
-        from yelp_data_pipeline_spark.operators.graph import (
-            connected_components_star,
-        )
-
-        df = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11)], "src long, dst long"
-        )
-        got = {
-            (r["node"], r["cluster"])
-            for r in connected_components_star(df, prepass_rounds=5).collect()
-        }
-        assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-
-
 class TestWideCode:
     def test_wide_mih_lossless_at_r8_and_r12(self, spark):
         """120-bit MIH (8×15-bit chunks, ball ≤ 1 through radius 15)

@@ -11,9 +11,11 @@ claims so a later refactor cannot silently break them:
 - `cosine_neardup_pairs(use_pandas_projection=True)` claims exact sign
   bits on INTEGER-valued vectors (the hashed-text-embedding rows wired
   in registry/warehouse_b.py rely on this).
-- `connected_components` runs ONE job per round via a lazy
+- `connected_components` runs ONE action per round via a lazy
   localCheckpoint; labels must stay exact and the returned relation
-  must be checkpoint-rooted.
+  must be checkpoint-rooted. The four converge-tested graph loops
+  (hash-min CC, star CC, k-core, BFS) have their build-time Spark job
+  counts pinned.
 - `_top_pc_state` mirrors Spark SQL's NULL / NaN / div-by-zero
   semantics in its driver-side power iteration (advisor r17 items).
 - `ensure_min_parallelism` probes (not skips) LogicalRDD-rooted plans.
@@ -25,9 +27,10 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import jobs_during
 from yelp_data_pipeline_spark.functions.vectors import dot
 from yelp_data_pipeline_spark.operators import graph, similarity as sim
-from yelp_data_pipeline_spark.session import ensure_min_parallelism
+from yelp_data_pipeline_spark.session import ensure_min_parallelism, release_tracked
 
 # Exact-round-trip stress values: negative zero, subnormal, huge,
 # repeating binary fractions, and shortest-repr corner cases.
@@ -147,23 +150,21 @@ class TestPandasProjectionExactOnIntegerVectors:
         assert len(expr_pairs) >= 40  # the planted dups were found
 
 
+# chain 1-2-3-4-5 (multi-round propagation), star 10-(11,12,13),
+# pair 20-21.
+MIXED_GRAPH = [(1, 2), (2, 3), (3, 4), (4, 5),
+               (10, 11), (10, 12), (10, 13), (20, 21)]
+
+
 class TestConnectedComponentsLazyCheckpoint:
     def test_labels_exact_and_checkpoint_rooted(self, spark):
-        # chain 1-2-3-4-5 (multi-round propagation), star 10-(11,12,13),
-        # pair 20-21.
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (4, 5),
-             (10, 11), (10, 12), (10, 13), (20, 21)],
-            "a long, b long",
-        )
+        edges = spark.createDataFrame(MIXED_GRAPH, "a long, b long")
         labels = graph.connected_components(edges, "a", "b")
         got = {r["node"]: r["cluster"] for r in labels.collect()}
         want = {n: 1 for n in (1, 2, 3, 4, 5)}
         want.update({n: 10 for n in (10, 11, 12, 13)})
         want.update({20: 20, 21: 20})
         assert got == want
-        # Hash-min on a 4-hop chain: >1 round, bounded by diameter+1.
-        assert 2 <= graph.LAST_CC_ROUNDS <= 6
         # The returned relation must read the final round's checkpoint
         # blocks (LogicalRDD root), not re-derive the whole fixpoint.
         assert "LogicalRDD" in labels._jdf.queryExecution().analyzed().toString()
@@ -174,6 +175,31 @@ class TestConnectedComponentsLazyCheckpoint:
         )
         with pytest.raises(RuntimeError, match="did not converge"):
             graph.connected_components(edges, "a", "b", max_iter=2)
+
+
+# Spark jobs each converge-tested loop submits while building its
+# result on MIXED_GRAPH (local[4], 4 shuffle partitions). Under AQE a
+# round's one action runs each shuffle stage as its own job, so these
+# are not round counts; they pin the per-round plans and the
+# one-action-per-round discipline (hash-min takes 5 rounds here). An
+# extra action per round, or a lost checkpoint, moves them.
+@pytest.mark.parametrize(
+    "op, jobs",
+    [
+        (lambda df: graph.connected_components(df, "a", "b"), 34),
+        (lambda df: graph.connected_components_star(df, "a", "b"), 40),
+        (lambda df: graph.kcore_peel(df, k=1, src="a", dst="b"), 16),
+        (lambda df: graph.bfs_hops(df, "a", "b"), 16),
+    ],
+    ids=["hashmin_cc", "star_cc", "kcore", "bfs"],
+)
+def test_fixpoint_build_job_count(spark, op, jobs):
+    edges = spark.createDataFrame(MIXED_GRAPH, "a long, b long")
+    # k-core's edge list persists via track_persist: a cached copy from
+    # an earlier call would skip its build jobs.
+    release_tracked()
+    _, n = jobs_during(spark, lambda: op(edges))
+    assert n == jobs
 
 
 class TestTopPcDegenerateInputs:

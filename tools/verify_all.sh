@@ -5,6 +5,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
+# Same session layout as the tier-1 pytest command: one Spark core per
+# host core (nproc reads OMP_NUM_THREADS, so drop it), shuffle spill
+# under /tmp. A value already in the environment wins.
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 
 echo "== 1/8 oracle type audit (pandas-safe final projections) =="
 python tools/audit_oracle_types.py

@@ -10,9 +10,10 @@ labels; ``dedup_survivors`` picks min-id survivors per cluster.
 Scale posture: the iteration is plain label propagation ("hash-min"),
 each round a distributed join + min-aggregate; rounds needed = graph
 diameter. Near-dup graphs are overwhelmingly tiny star/clique
-clusters (diameter ≤ ~3), so convergence is fast. Each round is ONE
-job: a lazy localCheckpoint truncates the plan and the convergence
-count materializes its blocks (plans don't grow unboundedly). For
+clusters (diameter ≤ ~3), so convergence is fast. The converge-tested
+loops here (hash-min, star CC, k-core, BFS) share one round discipline,
+``_fixpoint``: a lazy localCheckpoint per round keeps plans flat and
+one count per round both materializes it and tests convergence. For
 adversarial long-chain graphs, the large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14) halves the diameter per round; hash-min is the right default
@@ -21,15 +22,61 @@ for dedup workloads.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# Introspection: rounds the last connected_components call took to
-# reach the label fixpoint (the changed==0 exit round included).
-# Written for measurement tooling (BASELINE.md convergence tables);
-# never read by the operators themselves.
-LAST_CC_ROUNDS: int = 0
+
+def _fixpoint(
+    step: Callable[[DataFrame | None], DataFrame],
+    count: Callable[[DataFrame, DataFrame | None], int],
+    max_rounds: int,
+    arg: str = "max_iter",
+    first: DataFrame | None = None,
+    stop: Callable[[int, int | None], bool] = lambda n, prev_n: n == 0,
+) -> tuple[DataFrame, int, int]:
+    """Run ``step`` rounds to a fixpoint; ``(last, n, rounds)``.
+
+    Round i builds ``step(prev)``, where ``prev`` is round i-1's
+    relation (``first`` in round 1), and cuts its lineage with a LAZY
+    ``localCheckpoint``. ``count(rel, prev)`` is the round's one action:
+    it materializes the checkpoint blocks (MEMORY_AND_DISK, lineage
+    truncated when the job completes) and its result ``n`` answers
+    convergence. The loop stops after the first round where
+    ``stop(n, previous round's n)`` holds (default: ``n == 0``) or after
+    ``max_rounds`` rounds; ``last`` and ``n`` are the final round's
+    relation and count, so ``stop`` failing on them means the bound was
+    hit.
+
+    Why this shape: without the cut, each round's logical plan nests
+    the previous one (hash-min CC measured 9.5 MB plan strings / 798
+    nested references after ~6 rounds; star CC references its input ~6
+    times per round and OOMed the driver generating plan strings). An
+    eager checkpoint followed by the convergence count paid a second
+    full job per round for the same rows. Under AQE the one action can
+    still be several Spark jobs, one per shuffle stage. The blocks are
+    RDD-owned: the context cleaner frees them once the round's frame is
+    dropped (the ``cut_lineage`` trade, fine for slim label, edge and
+    frontier relations).
+
+    Not routed through here: ``_pagerank_loop`` and ``hits_bipartite``
+    run a fixed number of rounds with no probe, so they would gain a
+    count job per round or a branch in this helper; the perceptron, MMR
+    and power-iteration loops elsewhere are not lineage-cut Spark
+    fixpoints.
+    """
+    if max_rounds < 1:
+        raise ValueError(f"{arg} must be >= 1, got {max_rounds}")
+    prev, prev_n = first, None
+    for rounds in range(1, max_rounds + 1):
+        rel = step(prev).localCheckpoint(eager=False)
+        n = count(rel, prev)
+        if stop(n, prev_n):
+            break
+        prev, prev_n = rel, n
+    return rel, n, rounds
 
 
 def connected_components(
@@ -53,8 +100,6 @@ def connected_components(
     ``max_iter`` (or switch to large-star/small-star, which halves the
     diameter per round) for adversarial long-chain graphs.
     """
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Symmetrize with ONE scan of the (often expensive — e.g. a whole
     # MinHash-LSH pipeline) edge relation: explode each edge into both
     # directions. A union of two selects would execute that subtree
@@ -72,14 +117,15 @@ def connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = (
+    init_labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("cluster", F.col("node"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    init_labels = labels
-    for it in range(max_iter):
+
+    def hashmin_round(prev: DataFrame) -> DataFrame:
+        labels = prev.select("node", "cluster")
         # min label among each node's neighborhood (neighbors only;
         # the node's own label joins back below).
         nbr_min = (
@@ -87,42 +133,29 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("cluster").alias("nbr_cluster"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["u"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster"), F.coalesce("nbr_cluster", F.col("cluster"))
-                ).alias("cluster"),
-                (F.coalesce("nbr_cluster", F.col("cluster")) < F.col("cluster")).alias(
-                    "__changed"
-                ),
-            )
+        return labels.join(nbr_min, labels["node"] == nbr_min["u"], "left").select(
+            "node",
+            F.least(
+                F.col("cluster"), F.coalesce("nbr_cluster", F.col("cluster"))
+            ).alias("cluster"),
+            (F.coalesce("nbr_cluster", F.col("cluster")) < F.col("cluster")).alias(
+                "__changed"
+            ),
         )
-        # ONE job per round (r18, the same fusion connected_components_
-        # star got in r17): a LAZY localCheckpoint truncates the
-        # round's LOGICAL plan at creation (without the cut the plan
-        # string grows geometrically — measured 9.5 MB / 798 nested
-        # references after ~6 rounds), and the convergence-count job
-        # below both MATERIALIZES the checkpoint blocks
-        # (MEMORY_AND_DISK, lineage truncated on job completion) and
-        # answers the fixpoint test — the previous eager-checkpoint-
-        # then-count shape paid a second full job per round for the
-        # same rows. Blocks are RDD-owned (freed by the context
-        # cleaner once the round's frame is dropped — the cut_lineage
-        # trade, fine for slim label relations).
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("__changed")).count()
-        labels = new_labels.select("node", "cluster")
-        if changed == 0:
-            break
-    global LAST_CC_ROUNDS
-    LAST_CC_ROUNDS = it + 1
-    sym.unpersist()
-    init_labels.unpersist()
+
+    try:
+        last, changed, rounds = _fixpoint(
+            hashmin_round,
+            lambda rel, _: rel.filter(F.col("__changed")).count(),
+            max_iter,
+            first=init_labels,
+        )
+    finally:
+        sym.unpersist()
+        init_labels.unpersist()
     if changed != 0:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
+            f"connected_components did not converge in {rounds} rounds "
             f"({changed} labels still changing): graph diameter exceeds "
             "max_iter; raise it or use connected_components_star "
             "(O(log d) rounds)."
@@ -130,7 +163,7 @@ def connected_components(
     # The returned relation reads the final round's checkpoint blocks
     # (materialized by its convergence count), so callers that fan it
     # into several joins scan cached blocks, not a recompute.
-    return labels
+    return last.select("node", "cluster")
 
 
 def connected_components_star(
@@ -138,8 +171,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    rounds_per_checkpoint: int = 1,
-    prepass_rounds: int = 0,
 ) -> DataFrame:
     """Connected components via the alternating large-star/small-star
     algorithm (Kiveris et al., "Connected Components in MapReduce and
@@ -157,41 +188,11 @@ def connected_components_star(
     of depth-1 stars centered at component minima.
 
     Driver-round-trip economy: the fixpoint test is ONE
-    full-outer-join job (a row with either side NULL ⇒ edge sets
+    full-outer-join count (a row with either side NULL ⇒ edge sets
     differ) instead of the count-then-anti-join pair.
-    ``rounds_per_checkpoint`` > 1 fuses star rounds into one
-    checkpoint — convergence-sound (the star fixpoint is stable) but
-    MEASURED SLOWER (3× at sf0.1): each round fans its input out ~4
-    ways (sym feeds the min-aggregate and the join, large feeds
-    small-star twice), so an un-materialized first round is
-    re-computed by every consumer of the second — the same
-    fan-out-needs-materialization law the per-round eager checkpoint
-    exists to enforce. Default stays 1; the knob documents the
-    negative result.
 
-    ``prepass_rounds`` > 0 runs that many cheap HASH-MIN rounds first
-    and CONTRACTS the graph by the partial labels before the star
-    loop: after k rounds every node holds the min id of its k-hop
-    neighborhood, each edge (u, v) maps to (L(u), L(v)), self-loops
-    drop, and components of diameter ≤ k vanish entirely — the star
-    rounds then see only the residual long-diameter skeleton.
-    Soundness: L(u) is always in u's component (it is a neighborhood
-    min), a component's global min m has L(m) = m, and contracted
-    edges preserve inter-group connectivity, so star-over-contracted
-    labels compose exactly (node → L(node) → star label).
-
-    NEGATIVE RESULT on the golden-records graph (measured sf0.1,
-    BASELINE.md round 12): break-even within host noise (warm ~10.5s
-    either way at k ∈ {2, 3, 6}). The premise — collapse the
-    short-diameter mass so the star rounds shuffle fewer edges —
-    is structurally void there: TPC-H customer names chain at edit
-    distance 1, so the edge mass sits in giant chain components and
-    k hash-min rounds cut only ~3% of edges per round (44100 → 40050
-    at k=3) while costing k extra join+agg rounds. Default stays 0.
-    The knob is kept (correctness-pinned in tests/test_round12_ops)
-    because on the COMMON near-dup shape — tiny star/clique clusters,
-    diameter ≤ ~3 — the same contraction erases almost the whole edge
-    set before the first star round.
+    Raises ``RuntimeError`` if ``max_iter`` rounds pass without
+    reaching the fixpoint.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -206,140 +207,65 @@ def connected_components_star(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     all_nodes.count()
-    pre = None
-    if prepass_rounds > 0:
-        sym0 = (
-            e.select("u", "v")
-            .union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+
+    def star_round(cur: DataFrame) -> DataFrame:
+        # ---- large-star ----
+        sym = cur.select("u", "v").union(
+            cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        lab = all_nodes.select("node", F.col("node").alias("l"))
-        for _ in range(prepass_rounds):
-            nbr_min = (
-                sym0.join(
-                    lab.select(F.col("node").alias("v"), "l"), "v"
-                )
-                .groupBy("u")
-                .agg(F.min("l").alias("nl"))
-                .withColumnRenamed("u", "node")
-            )
-            # Eager checkpoint per round — the CC lineage law: an
-            # unmaterialized round is re-derived by the next one.
-            lab = (
-                lab.join(nbr_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("l"), F.coalesce("nl", F.col("l"))
-                    ).alias("l"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        sym0.unpersist()
-        pre = lab  # (node, l): node -> min id of its k-hop neighborhood
-        contracted = (
-            e.join(pre.select(F.col("node").alias("u"), F.col("l").alias("lu")), "u")
-            .join(pre.select(F.col("node").alias("v"), F.col("l").alias("lv")), "v")
-            .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
+        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        large = (
+            sym.join(mins, "u")
+            .where(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        # ---- small-star (on the large-star output) ----
+        oriented = large.select(
+            F.greatest("u", "v").alias("a"), F.least("u", "v").alias("b")
+        ).where(F.col("a") != F.col("b"))
+        smins = oriented.groupBy("a").agg(F.min("b").alias("m"))
+        return (
+            oriented.join(smins, "a")
+            .select(F.col("b").alias("u"), F.col("m").alias("v"))
+            .union(smins.select(F.col("a").alias("u"), F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        e.unpersist()
-        e = contracted.persist(StorageLevel.MEMORY_AND_DISK)
-    converged = False
-    for _ in range(max_iter):
-        cur = e
-        for _sub in range(max(1, rounds_per_checkpoint)):
-            # ---- large-star ----
-            sym = cur.select("u", "v").union(
-                cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = sym.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
-            )
-            large = (
-                sym.join(mins, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            # ---- small-star (on the large-star output) ----
-            oriented = large.select(
-                F.greatest("u", "v").alias("a"), F.least("u", "v").alias("b")
-            ).where(F.col("a") != F.col("b"))
-            smins = oriented.groupBy("a").agg(F.min("b").alias("m"))
-            cur = (
-                oriented.join(smins, "a")
-                .select(F.col("b").alias("u"), F.col("m").alias("v"))
-                .union(
-                    smins.select(F.col("a").alias("u"), F.col("m").alias("v"))
-                )
-                .where(F.col("u") != F.col("v"))
-                .distinct()
-            )
-        # ONE job per round (r17): a LAZY localCheckpoint truncates the
-        # round's LOGICAL plan immediately (the returned frame scans a
-        # LogicalRDD — without the cut each round references `e` ~6
-        # times, so plan size grows multiplicatively and the driver
-        # OOMs generating plan strings within a few rounds), while the
-        # fixpoint-count job below both MATERIALIZES the checkpoint
-        # blocks (MEMORY_AND_DISK, lineage truncated on job
-        # completion) and answers convergence — the previous
-        # eager-checkpoint-then-count shape paid a second full job per
-        # round for the same result. Blocks are RDD-owned (freed by
-        # the context cleaner once the round's frame is dropped — the
-        # cut_lineage trade, fine for slim edge lists). The fixpoint
-        # test is unchanged: any full-outer row with a NULL side is an
-        # edge present in exactly one of the two sets. (A bare
-        # left-anti count is NOT sufficient — new_e ⊂ e gives 0.)
-        new_e = cur.localCheckpoint(eager=False)
-        changed = (
+
+    def edges_changed(new_e: DataFrame, old_e: DataFrame) -> int:
+        # Any full-outer row with a NULL side is an edge present in
+        # exactly one of the two sets. (A bare left-anti count is NOT
+        # sufficient — new_e ⊂ old_e gives 0.)
+        return (
             new_e.withColumn("__a", F.lit(1))
-            .join(e.withColumn("__b", F.lit(1)), ["u", "v"], "full_outer")
+            .join(old_e.withColumn("__b", F.lit(1)), ["u", "v"], "full_outer")
             .where(F.col("__a").isNull() | F.col("__b").isNull())
             .count()
         )
-        e.unpersist()  # explicit persist on round 0's e; no-op after
-        e = new_e
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
+
+    try:
+        stars, changed, rounds = _fixpoint(star_round, edges_changed, max_iter, first=e)
+        if changed != 0:
+            raise RuntimeError(
+                f"alternating star did not converge in {rounds} rounds"
+            )
+        # Stars: (u → center). Centers and isolated-after-dedup nodes
+        # label themselves. Eagerly checkpoint the (tiny: one row per
+        # node) label map before releasing the loop relations: without
+        # the cut, every consumer of the returned frame embeds the full
+        # blocking/verify lineage of the ORIGINAL edge relation in its
+        # plan — customer_golden_records' three survivorship arms
+        # audited at 550 joins / 224 exchanges before this (round-10
+        # plan audit), ~30 after. One extra small job here buys a
+        # scan-sized plan for every downstream subtree.
+        return (
+            all_nodes.join(stars, all_nodes["node"] == stars["u"], "left")
+            .select("node", F.coalesce("v", F.col("node")).alias("cluster"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
         e.unpersist()
         all_nodes.unpersist()
-        raise RuntimeError(
-            f"alternating star did not converge in {max_iter} rounds"
-        )
-    # Stars: (u → center). Centers and isolated-after-dedup nodes
-    # label themselves. With a pre-pass, compose through the partial
-    # labels: node → L(node) → star label of the contracted
-    # representative (L(node) when the representative is itself a
-    # center, or when its component collapsed entirely pre-star).
-    if pre is not None:
-        labels = (
-            pre.join(e, pre["l"] == e["u"], "left")
-            .select(
-                "node", F.coalesce("v", F.col("l")).alias("cluster")
-            )
-        )
-    else:
-        labels = (
-            all_nodes.join(e, all_nodes["node"] == e["u"], "left")
-            .select(
-                "node", F.coalesce("v", F.col("node")).alias("cluster")
-            )
-        )
-    # Eagerly checkpoint the (tiny: one row per node) label map and
-    # release the loop relations NOW: without the cut, every consumer
-    # of the returned frame embeds the full blocking/verify lineage of
-    # the ORIGINAL edge relation in its plan — customer_golden_records'
-    # three survivorship arms audited at 550 joins / 224 exchanges
-    # before this (round-10 plan audit), ~30 after. One extra small job
-    # here buys a scan-sized plan for every downstream subtree.
-    labels = labels.localCheckpoint(eager=True)
-    e.unpersist()
-    all_nodes.unpersist()
-    return labels
 
 
 def dedup_clusters(
@@ -632,9 +558,9 @@ def kcore_peel(
 
     Scale posture: per round ONE semi-join of the symmetrized edge
     list against the survivor set (edge-keyed shuffle) + ONE
-    groupBy(node) degree count with map-side partials; survivor
-    lineage is cut every round (eager localCheckpoint — the CC
-    lesson, see module header). Edges symmetrize + dedup once up
+    groupBy(node) degree count with map-side partials; each round's
+    survivors are lazily checkpointed and materialized by the
+    convergence count (``_fixpoint``). Edges symmetrize + dedup once up
     front and stay persisted across rounds.
 
     Returns (node, core_deg): surviving nodes with their within-core
@@ -642,8 +568,6 @@ def kcore_peel(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
     from ..session import track_persist
 
     sym = track_persist(
@@ -659,9 +583,13 @@ def kcore_peel(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    alive = sym.select(F.col("u").alias("node")).distinct()
-    n_alive = None
-    for _ in range(rounds):
+
+    def peel(survivors: DataFrame | None) -> DataFrame:
+        alive = (
+            sym.select(F.col("u").alias("node")).distinct()
+            if survivors is None
+            else survivors.select(F.col("u").alias("node"))
+        )
         deg = (
             sym.join(alive, sym["u"] == alive["node"], "left_semi")
             .join(
@@ -672,19 +600,17 @@ def kcore_peel(
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("core_deg"))
         )
-        survivors = deg.where(F.col("core_deg") >= k)
-        # LAZY checkpoint + count = ONE job per round (r17): the count
-        # materializes the checkpoint blocks and yields the
-        # convergence scalar; the previous eager-then-count shape paid
-        # a second full job per round. Plan stays flat either way (the
-        # returned frame scans the checkpointed RDD).
-        survivors = survivors.localCheckpoint(eager=False)
-        n_next = survivors.count()
-        alive = survivors.select(F.col("u").alias("node"))
-        if n_alive is not None and n_next == n_alive:
-            break
-        n_alive = n_next
-    # Final degrees come from the last converged/round-limited pass.
+        return deg.where(F.col("core_deg") >= k)
+
+    # Converged once a round keeps as many nodes as the one before; the
+    # last pass (converged or round-limited) carries the final degrees.
+    survivors, _, _ = _fixpoint(
+        peel,
+        lambda rel, _: rel.count(),
+        rounds,
+        arg="rounds",
+        stop=lambda n, prev_n: n == prev_n,
+    )
     return survivors.select(F.col("u").alias("node"), "core_deg")
 
 
@@ -982,9 +908,10 @@ def bfs_hops(
     FIRST (minimal) hop — no min() reduction needed. `rounds` bounds
     the unrolled plan (the k-core/pagerank anytime contract: fixed
     rounds, exact integers, deterministic regardless of scheduling);
-    nodes not reached within `rounds` report as hop -1. Eager
-    localCheckpoint per round keeps lineage linear (the plan-fan-in
-    lesson from the unigram-LM DP).
+    nodes not reached within `rounds` report as hop -1. Each round's
+    frontier is lazily checkpointed and its count (the emptiness probe)
+    materializes it (``_fixpoint``), so lineage stays linear (the
+    plan-fan-in lesson from the unigram-LM DP).
 
     Returns (hop, n_nodes) ordered by hop; the -1 row only when
     unreached nodes exist.
@@ -1009,32 +936,29 @@ def bfs_hops(
         .select(F.col("u").alias("node"), F.lit(0).cast("int").alias("hop"))
     )
     seed = seed.localCheckpoint(eager=True)
-    # ONE job per round (r17): the frontier is LAZY-checkpointed and
-    # its count job both materializes the checkpoint blocks and
-    # answers the emptiness probe — the previous shape paid three jobs
-    # per round (eager frontier checkpoint, eager checkpoint of the
-    # growing dist union, isEmpty). The settled set is kept as a LIST
-    # of per-round checkpointed frontiers; each anti-join unions those
-    # flat scans (linear plan, no per-round union checkpoint job).
-    levels = [seed]
-    frontier = seed
-    for h in range(1, rounds + 1):
+    # The settled set is kept as a LIST of per-round checkpointed
+    # frontiers; each anti-join unions those flat scans (linear plan,
+    # no per-round union checkpoint job).
+    levels: list[DataFrame] = []
+
+    def expand(frontier: DataFrame) -> DataFrame:
+        levels.append(frontier)
         settled = levels[0].select("node")
         for lv in levels[1:]:
             settled = settled.union(lv.select("node"))
-        nxt = (
+        return (
             frontier.join(sym, frontier["node"] == sym["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(settled, "node", "left_anti")
-            .withColumn("hop", F.lit(h).cast("int"))
-            .localCheckpoint(eager=False)
+            .withColumn("hop", F.lit(len(levels)).cast("int"))
         )
-        n_new = nxt.count()
-        frontier = nxt
-        if n_new == 0:
-            break
-        levels.append(nxt)
+
+    last, n_new, _ = _fixpoint(
+        expand, lambda rel, _: rel.count(), rounds, arg="rounds", first=seed
+    )
+    if n_new:  # round-limited: the last, non-empty frontier is a level too
+        levels.append(last)
     dist = levels[0]
     for lv in levels[1:]:
         dist = dist.union(lv)

@@ -35,6 +35,7 @@ from functools import partial
 from typing import Callable
 
 from pyspark import inheritable_thread_target
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -116,6 +117,24 @@ def bronze_to_silver(
     )
 
 
+# The columns silver_to_gold reads from silver/checkins, for a table
+# that has no data file yet.
+_EMPTY_CHECKINS_SCHEMA = "business_id string, date timestamp, year int, month int"
+
+
+def _read_silver_checkins(spark: SparkSession, silver_dir: str) -> DataFrame:
+    """silver/checkins, or an empty frame if it holds no data file.
+
+    A month with no check-ins writes no partition, so on a fresh
+    warehouse the table directory has nothing to infer a schema from."""
+    try:
+        return spark.read.parquet(f"{silver_dir}/checkins")
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return spark.createDataFrame([], _EMPTY_CHECKINS_SCHEMA)
+
+
 def silver_to_gold(
     spark: SparkSession, silver_dir: str, gold_dir: str, year: int, month: int
 ) -> dict[str, int]:
@@ -124,7 +143,7 @@ def silver_to_gold(
     tables, the rows of the whole merged table)."""
     month_pred = (F.col("year") == year) & (F.col("month") == month)
     reviews = spark.read.parquet(f"{silver_dir}/reviews").filter(month_pred)
-    checkins = spark.read.parquet(f"{silver_dir}/checkins").filter(month_pred)
+    checkins = _read_silver_checkins(spark, silver_dir).filter(month_pred)
     business = spark.read.parquet(f"{silver_dir}/business")
     users = spark.read.parquet(f"{silver_dir}/users")
 

@@ -3564,7 +3564,8 @@ ORDER BY hop
     "profile is the empirical reach/diameter read that tells you how "
     "many rounds iterative algorithms on this graph need. Level-"
     "synchronous frontier expansion (one keyed join + settled-set "
-    "anti-join per round, eager checkpoints), fixed 8-round anytime "
+    "anti-join per round, lazy per-round checkpoints materialized by "
+    "the emptiness count), fixed 8-round anytime "
     "contract, hop -1 = unreached; the oracle replays it as the "
     "hop-bounded recursive min-label walk.",
 )

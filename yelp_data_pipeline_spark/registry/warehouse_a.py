@@ -2427,7 +2427,8 @@ a{t} AS MATERIALIZED (SELECT u AS node FROM d{t} WHERE core_deg >= {k})""")
     "run exactly 8 peel rounds; peeling is monotone so early "
     "convergence equals the full unroll. Per round ONE survivor "
     "semi-join + ONE map-side-combinable degree count; survivor "
-    "lineage cut every round (eager localCheckpoint); edges "
+    "lineage cut every round (lazy localCheckpoint, materialized by "
+    "the round's convergence count); edges "
     "symmetrize + dedup once, persisted across rounds.",
 )
 def q_supplier_kcore(spark, sf_dir):
