@@ -1,3 +1,4 @@
+import importlib.util
 import os
 import sys
 import uuid
@@ -52,3 +53,21 @@ def jobs_during(spark, fn):
                   "spark.job.interruptOnCancel"):
             sc.setLocalProperty(k, None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def declared_fields(spark, ddl, schema):
+    """(the fields of the DDL string ``ddl``, the fields of ``schema``
+    that it names) as (name, type) lists, for an equality assert."""
+    declared = [(f.name, f.dataType) for f in spark.createDataFrame([], ddl).schema]
+    names = {n for n, _ in declared}
+    return declared, [(f.name, f.dataType) for f in schema if f.name in names]
+
+
+def perfbench_bronze():
+    """The benchmark's seeded bronze generator (``perfbench/bronze.py``)."""
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "perfbench", "bronze.py")
+    spec = importlib.util.spec_from_file_location("perfbench_bronze", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod

@@ -14,7 +14,7 @@ import uuid
 import pyspark.sql.functions as F
 import pytest
 
-from conftest import jobs_during
+from conftest import declared_fields, jobs_during, perfbench_bronze
 from yelp_data_pipeline_spark import __main__ as cli
 from yelp_data_pipeline_spark import pipelines
 from yelp_data_pipeline_spark import session as session_mod
@@ -276,6 +276,127 @@ def test_first_month_without_checkins_on_fresh_warehouse(spark, bronze, tmp_path
     assert (b2s["attempts"], s2g["attempts"]) == (1, 1)
     assert b2s["rows"] == {**B2S_ROWS, "checkins": 0}
     assert s2g["rows"] == APRIL_S2G_ROWS
+
+
+def _bronze_with_may(bronze, tmp_path):
+    """A copy of ``bronze`` plus 2021-05, a month with a check-in and a
+    tip but no review."""
+    src = str(tmp_path / "bronze")
+    shutil.copytree(bronze, src)
+    with open(f"{src}/checkin/c.json", "a") as f:
+        f.write(json.dumps({"business_id": "b2", "date": "2021-05-07 08:00:00"}) + "\n")
+    _w(f"{src}/tip/year=2021/month=5/t.json", [
+        {"user_id": "u1", "business_id": "b2", "text": "tip",
+         "compliment_count": 0, "date": "2021-05-03 09:00:00"}])
+    return src
+
+
+def test_first_month_without_reviews_on_fresh_warehouse(spark, bronze, tmp_path):
+    """The empty write leaves silver/reviews with no data file; s2g reads
+    it with its declared schema as an empty frame."""
+    src = _bronze_with_may(bronze, tmp_path)
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    b2s, s2g = pipelines.backfill(spark, src, silver, gold, (2021, 5), (2021, 5))
+    assert (b2s["attempts"], s2g["attempts"]) == (1, 1)
+    assert b2s["rows"] == {**B2S_ROWS, "reviews": 0}
+    assert s2g["rows"] == {"dim_time": 1, "dim_business": 2, "dim_user": 1,
+                           "bridge_business_category": 3, "fact_review": 0,
+                           "fact_checkin": 1}
+
+
+def test_type_drifted_bronze_row_aborts_the_backfill(spark, bronze, tmp_path):
+    """A declared bronze source is read FAILFAST: a review whose stars is
+    not a number fails bronze_to_silver (rather than widening or nulling
+    silver/reviews.stars), and the backfill aborts after its retry."""
+    src = str(tmp_path / "bronze")
+    shutil.copytree(bronze, src)
+    _w(f"{src}/review/year=2021/month=1/r.json", [
+        {"review_id": "r1", "user_id": "u1", "business_id": "b1",
+         "stars": "five", "useful": 1, "funny": 0, "cool": 0,
+         "text": "great", "date": "2021-01-05 12:00:00"}])
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    calls = []
+
+    def b2s(*args):
+        calls.append(args)
+        return pipelines.bronze_to_silver(*args)
+
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        pipelines.backfill(spark, src, silver, gold, (2021, 1), (2021, 2), _b2s=b2s)
+    assert len(calls) == 2  # one attempt and one retry, then abort
+    assert not os.path.exists(gold)
+
+
+def test_declared_schemas_match_what_the_writers_produce(spark, bronze, tmp_path, monkeypatch):
+    """Each declared bronze schema equals what inference returns on this
+    fixture; each declared silver read schema, and the schema a gold
+    MERGE target is read with (that of its updates plan), equal the
+    schema of the table as written."""
+    for source, ddl in pipelines.BRONZE_SCHEMAS.items():
+        inferred = spark.read.json(f"{bronze}/{source}").schema
+        want, got = declared_fields(spark, ddl, inferred)
+        assert got == want, source
+
+    upsert_schemas = {}
+    upsert = pipelines._upsert
+
+    def recording_upsert(spark_, updates, path, keys):
+        upsert_schemas[os.path.basename(path)] = updates.schema
+        return upsert(spark_, updates, path, keys)
+
+    monkeypatch.setattr(pipelines, "_upsert", recording_upsert)
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    pipelines.backfill(spark, bronze, silver, gold, (2021, 1), (2021, 2))
+    for table, ddl in pipelines.SILVER_SCHEMAS.items():
+        written = spark.read.parquet(f"{silver}/{table}").schema
+        want, got = declared_fields(spark, ddl, written)
+        assert got == want, table
+    assert set(upsert_schemas) == {"dim_business", "dim_user", "bridge_business_category"}
+    for table, schema in upsert_schemas.items():
+        written = spark.read.parquet(f"{gold}/{table}").schema
+        assert [(f.name, f.dataType) for f in schema] == [
+            (f.name, f.dataType) for f in written], table
+
+
+# Spark jobs of a warm month (month 2 after month 1) on the ``bronze``
+# fixture. Of the reads, only the business and user JSON snapshots
+# still infer a schema. Before the declared schemas: bronze_to_silver
+# 12, silver_to_gold 30.
+WARM_MONTH_JOBS = {"bronze_to_silver": 9, "silver_to_gold": 23}
+
+
+def test_warm_month_job_counts(spark, bronze, tmp_path):
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    pipelines.backfill(spark, bronze, silver, gold, (2021, 1), (2021, 1))
+    _, b2s = jobs_during(spark, lambda: pipelines.bronze_to_silver(
+        spark, bronze, silver, 2021, 2))
+    _, s2g = jobs_during(spark, lambda: pipelines.silver_to_gold(
+        spark, silver, gold, 2021, 2))
+    assert {"bronze_to_silver": b2s, "silver_to_gold": s2g} == WARM_MONTH_JOBS
+
+
+def _compiles(spark):
+    """Janino compiles so far in this JVM (cache misses of the codegen cache)."""
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_month_hits_the_codegen_cache(spark, tmp_path):
+    """A month's generated classes outnumber the default codegen cache
+    (100 entries), which then evicts them cyclically: on this input a
+    repeat of month 2 compiled 98 classes again. The session's cache
+    holds the month's working set, so the repeat compiles only the two
+    classes of the business attribute sample: Spark names each LIMIT's
+    counter from a JVM-wide sequence, so a plan with a LIMIT generates
+    new source every time it runs."""
+    src = str(tmp_path / "bronze")
+    perfbench_bronze().generate(src, 7, n_business=40, n_users=40,
+                                reviews_per_month=40, tips_per_month=20)
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    pipelines.backfill(spark, src, silver, gold, (2021, 1), (2021, 2))
+    before = _compiles(spark)
+    pipelines.backfill(spark, src, silver, gold, (2021, 2), (2021, 2))
+    assert _compiles(spark) - before == 2
 
 
 def test_run_concurrently_waits_for_every_thunk_before_raising(spark):

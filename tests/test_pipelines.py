@@ -9,6 +9,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from conftest import declared_fields, perfbench_bronze
 from yelp_data_pipeline_spark import pipelines
 
 
@@ -80,6 +81,21 @@ def run_both_months(spark, bronze, warehouses):
         pipelines.bronze_to_silver(spark, bronze, silver, 2021, month)
         pipelines.silver_to_gold(spark, silver, gold, 2021, month)
     return silver, gold
+
+
+@pytest.mark.parametrize("source", ["fixture", "perfbench"])
+def test_declared_bronze_schemas_match_inference(spark, bronze, tmp_path, source):
+    """Each declared bronze schema is what ``spark.read.json`` infers on
+    this module's fixture and on the benchmark's bronze (seed 7), on the
+    declared fields."""
+    root = bronze
+    if source == "perfbench":
+        root = str(tmp_path / "bronze")
+        perfbench_bronze().generate(root, 7)
+    for src, ddl in pipelines.BRONZE_SCHEMAS.items():
+        inferred = spark.read.json(f"{root}/{src}").schema
+        want, got = declared_fields(spark, ddl, inferred)
+        assert got == want, src
 
 
 def test_silver_business_cleaned(spark, run_both_months):

@@ -20,6 +20,26 @@ instead of queueing behind the previous write. Row counts come from
 an ``Observation`` on each write, so they ride on the write's own job
 rather than re-executing the plan.
 
+Reads pass declared schemas, so a month spends no Spark job on schema
+inference and no pass over earlier months' files:
+
+- bronze ``checkin``, ``review`` and ``tip`` are read with
+  ``BRONZE_SCHEMAS``: the Yelp Open Dataset fields, in the order and
+  with the types ``spark.read.json`` infers for them. A declared source
+  is read with ``mode=FAILFAST``: a row whose value does not fit its
+  field (``"stars": "five"``) fails the task, and with it the backfill
+  once its retry fails too, instead of silently widening the silver
+  column (as inference would) or nulling it (as ``PERMISSIVE`` would).
+- bronze ``business`` and ``user`` keep inference, deliberately: they
+  are full snapshots whose silver tables keep whatever fields the files
+  carry, and business's flattened ``attributes_*`` / ``hours_*``
+  columns come from the data by design (B2S:64-76).
+- silver tables are read by ``silver_to_gold`` with ``SILVER_SCHEMAS``
+  (the month-scoped tables in full, the snapshots as the columns gold
+  projects), and a gold MERGE target with the schema of the plan that
+  wrote it. A table without data files (a month with no check-ins or
+  no reviews on a fresh warehouse) then reads as an empty frame.
+
 Storage is parquet (the harness has no Delta jars); the writers go
 through operators/upsert.py, whose Delta paths activate when
 delta-spark is importable. Month parameters drive partition-column
@@ -35,7 +55,6 @@ from functools import partial
 from typing import Callable
 
 from pyspark import inheritable_thread_target
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,6 +101,23 @@ def _run_concurrently(
     return {name: f.result() for name, f in futures.items()}
 
 
+# The declared bronze sources, as ``spark.read.json`` infers them on
+# Yelp-format files (partition columns last). business and user are
+# inferred; see the module docstring.
+BRONZE_SCHEMAS = {
+    "checkin": "business_id string, date string",
+    "review": (
+        "business_id string, cool bigint, date string, funny bigint, "
+        "review_id string, stars bigint, text string, useful bigint, "
+        "user_id string, year int, month int"
+    ),
+    "tip": (
+        "business_id string, compliment_count bigint, date string, "
+        "text string, user_id string, year int, month int"
+    ),
+}
+
+
 def bronze_to_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str, year: int, month: int
 ) -> dict[str, int]:
@@ -94,12 +130,14 @@ def bronze_to_silver(
         return _counted(_write_overwrite, df, f"{silver_dir}/{table}")
 
     def checkins() -> int:
-        raw = read_json_source(spark, f"{bronze_dir}/checkin")
+        raw = read_json_source(spark, f"{bronze_dir}/checkin", BRONZE_SCHEMAS["checkin"])
         df = cl.process_checkins(raw).filter(month_pred)
         return _counted(write_partitioned, df, f"{silver_dir}/checkins", _MONTH_PARTS)
 
     def dated(table: str, src: str) -> int:
-        raw = read_json_source(spark, f"{bronze_dir}/{src}", partition_filter=month_pred)
+        raw = read_json_source(
+            spark, f"{bronze_dir}/{src}", BRONZE_SCHEMAS[src], partition_filter=month_pred
+        )
         # bronze partition dirs provide (year, month); the cleaner
         # re-derives them from the payload date (B2S:108-111)
         df = cl.add_event_date_parts(raw.drop("year", "month"), "date")
@@ -117,22 +155,28 @@ def bronze_to_silver(
     )
 
 
-# The columns silver_to_gold reads from silver/checkins, for a table
-# that has no data file yet.
-_EMPTY_CHECKINS_SCHEMA = "business_id string, date timestamp, year int, month int"
-
-
-def _read_silver_checkins(spark: SparkSession, silver_dir: str) -> DataFrame:
-    """silver/checkins, or an empty frame if it holds no data file.
-
-    A month with no check-ins writes no partition, so on a fresh
-    warehouse the table directory has nothing to infer a schema from."""
-    try:
-        return spark.read.parquet(f"{silver_dir}/checkins")
-    except AnalysisException as e:
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-            raise
-        return spark.createDataFrame([], _EMPTY_CHECKINS_SCHEMA)
+# The silver tables as silver_to_gold reads them, in the order and with
+# the types bronze_to_silver writes them: the month-scoped tables in
+# full, the business and users snapshots as the columns gold projects
+# (their other columns follow the bronze data).
+SILVER_SCHEMAS = {
+    "reviews": (
+        "business_id string, cool bigint, date timestamp, funny bigint, "
+        "review_id string, stars bigint, text string, useful bigint, "
+        "user_id string, year int, month int"
+    ),
+    "checkins": "business_id string, date timestamp, year int, month int",
+    "business": (
+        "business_id string, categories string, city string, is_open boolean, "
+        "latitude double, longitude double, name string, postal_code string, "
+        "review_count bigint, stars double, state string"
+    ),
+    "users": (
+        "average_stars double, cool bigint, fans bigint, funny bigint, "
+        "name string, review_count bigint, useful bigint, user_id string, "
+        "yelping_since timestamp, elite_years_count int, friends_count int"
+    ),
+}
 
 
 def silver_to_gold(
@@ -142,10 +186,14 @@ def silver_to_gold(
     concurrently and returns ``{table: rows written}`` (for the MERGE
     tables, the rows of the whole merged table)."""
     month_pred = (F.col("year") == year) & (F.col("month") == month)
-    reviews = spark.read.parquet(f"{silver_dir}/reviews").filter(month_pred)
-    checkins = _read_silver_checkins(spark, silver_dir).filter(month_pred)
-    business = spark.read.parquet(f"{silver_dir}/business")
-    users = spark.read.parquet(f"{silver_dir}/users")
+
+    def silver(table: str) -> DataFrame:
+        return spark.read.schema(SILVER_SCHEMAS[table]).parquet(f"{silver_dir}/{table}")
+
+    reviews = silver("reviews").filter(month_pred)
+    checkins = silver("checkins").filter(month_pred)
+    business = silver("business")
+    users = silver("users")
 
     # dim_time — month-scoped (S2G:18-35; date_id restarts per month,
     # SURVEY §5 caveat), union of review + checkin dates
@@ -258,11 +306,14 @@ def _upsert(spark: SparkSession, updates: DataFrame, path: str, keys: list[str])
     overwrite a parquet path while a lazy plan still reads it, and a
     driver-side collect would not scale. (Delta does this swap
     transactionally; staging+rename is the filesystem stand-in.)
+
+    The target is read with the schema of ``updates``: the table on disk
+    was written by this same plan, so that is its declared schema.
     """
     if not os.path.isdir(path):
         return _counted(_write_overwrite, updates, path)
-    target = spark.read.parquet(path)
-    merged = merge_upsert_df(target, updates.select(*target.columns), keys)
+    target = spark.read.schema(updates.schema).parquet(path)
+    merged = merge_upsert_df(target, updates, keys)
     staging = path + "__staging"
     rows = _counted(_write_overwrite, merged, staging)
     shutil.rmtree(path)

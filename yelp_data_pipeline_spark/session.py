@@ -222,6 +222,20 @@ def get_spark(
         # pruning on every timestamp column. Micros is also what
         # Delta/Iceberg write.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # Generated classes a warm run compiles again under the default
+        # cache of 100, which it evicts cyclically. Measured distinct
+        # classes (perfbench inputs, c4): a cold monthly backfill month
+        # 120 (bronze_to_silver 40, silver_to_gold 80) plus 23 on the
+        # first MERGE month, a perfbench queries pass 126. At 100 a warm
+        # month recompiled 114-119 classes (about 2-3 s of Janino and a
+        # JIT warm-up of each new class) and a queries pass 114; at 1000
+        # a warm month compiles 4 and a queries pass 0. The 4 are the
+        # business attribute sample's: Spark names each LIMIT's counter
+        # from a JVM-wide sequence, so those plans generate new source
+        # on every run. 1000 holds both working sets with room for the
+        # cache's per-segment LRU. Static conf: it takes effect on the
+        # first session in the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # InferFiltersFromGenerate synthesizes `size(arr) > 0` from
         # every explode() and predicate pushdown then sinks it below
         # exchanges onto the SCAN — re-running the generator-input

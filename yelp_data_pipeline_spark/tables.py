@@ -125,16 +125,28 @@ def read_json_source(spark: SparkSession, path: str, schema=None, partition_filt
     """S1/S2 — Bronze JSON ingestion (bronze_to_silver_on_minio.py:
     141-151): line-delimited JSON, nested structs supported.
 
-    Prefer an explicit ``schema``: inference costs a full extra pass
-    over the data (the reference pays it on every monthly run). When
-    ``path`` is a Hive-partitioned layout (``year=Y/month=M/…``) the
+    Prefer an explicit ``schema``: inference costs a Spark job and a
+    full extra pass over every file under ``path`` (the reference pays
+    it on every monthly run; a partition filter does not narrow it).
+    A declared schema is read with ``mode=FAILFAST``: a row whose value
+    does not fit its field raises instead of becoming NULL, so type
+    drift in a source stops the job rather than emptying a column.
+    Without a schema the read infers, and a drifted value widens the
+    column's type instead. The monthly job declares its bronze
+    ``checkin``, ``review`` and ``tip`` sources and infers the
+    ``business`` and ``user`` snapshots, whose silver tables keep the
+    fields the data carries (see pipelines.py).
+
+    When ``path`` is a Hive-partitioned layout (``year=Y/month=M/…``) the
     partition dirs surface as typed columns; pass ``partition_filter``
     (a Column predicate on those) so pruning happens in the optimizer
     rather than via glob path arithmetic — the scan then lists only
     matching directories (the reference's S2/S4 path-math idiom breaks
     partition pruning and, on Delta 2.x, partial-path reads outright).
     """
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema).option("mode", "FAILFAST")
     df = reader.json(path)
     if partition_filter is not None:
         df = df.filter(partition_filter)
