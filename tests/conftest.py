@@ -1,3 +1,4 @@
+import contextlib
 import importlib.util
 import os
 import sys
@@ -53,6 +54,21 @@ def jobs_during(spark, fn):
                   "spark.job.interruptOnCancel"):
             sc.setLocalProperty(k, None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def cc_path(spark, path):
+    """Run ``graph.connected_components`` on ``path`` inside the block:
+    "driver" leaves the session as it is, "distributed" sets the
+    broadcast threshold to -1, which turns the driver path off."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if path == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def declared_fields(spark, ddl, schema):

@@ -1,8 +1,10 @@
 """Connected components, deterministic sampling, and the new text ops
 (TF-IDF / PII scrub / inverted index / curation composite)."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from conftest import cc_path
 from yelp_data_pipeline_spark.operators import graph, sampling as smp
 from yelp_data_pipeline_spark.operators import textops as tx
 
@@ -27,7 +29,7 @@ def test_cc_chain_star_disjoint(spark):
 
 
 def test_cc_long_chain_converges(spark):
-    # 12-node chain: worst-case diameter for hash-min propagation.
+    # 13-node chain: diameter 12.
     labels = _cc(spark, [(i, i + 1) for i in range(100, 112)])
     assert set(labels.values()) == {100}
     assert len(labels) == 13
@@ -132,59 +134,68 @@ def test_pivot_missing_combo_is_zero_and_unpivot_roundtrip(spark):
 
 
 def test_cc_raises_when_max_iter_exhausted(spark):
-    import pytest
-
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 9)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with cc_path(spark, "distributed"), pytest.raises(RuntimeError, match="did not converge"):
         graph.connected_components(chain, "doc_a", "doc_b", max_iter=1)
 
 
 def _cc_star(spark, edges):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    out = graph.connected_components_star(df, "doc_a", "doc_b")
-    got = {r["node"]: r["cluster"] for r in out.collect()}
-    from yelp_data_pipeline_spark.session import release_tracked
-
-    release_tracked()
-    return got
+    with cc_path(spark, "distributed"):
+        out = graph.connected_components(df, "doc_a", "doc_b")
+    return {r["node"]: r["cluster"] for r in out.collect()}
 
 
 def test_star_cc_matches_hashmin_on_mixed_graph(spark):
+    # The distributed path agrees with the driver path.
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (10, 13), (20, 21)]
     assert _cc_star(spark, edges) == _cc(spark, edges)
 
 
 def test_star_cc_handles_chain_beyond_hashmin_budget(spark):
-    import pytest
-
-    # 60-node chain: diameter 59. Hash-min needs 59 rounds (default
-    # max_iter=25 raises); alternating star needs ~log2(60).
-    chain = [(i, i + 1) for i in range(100, 160)]
-    df = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graph.connected_components(df, "doc_a", "doc_b")
-    labels = _cc_star(spark, chain)
+    # 60-node chain: diameter 59; alternating star needs ~log2(60)
+    # rounds of its default 50.
+    labels = _cc_star(spark, [(i, i + 1) for i in range(100, 160)])
     assert set(labels.values()) == {100}
     assert len(labels) == 61
 
 
 def test_star_cc_raises_when_max_iter_exhausted(spark):
-    import pytest
-
     chain = [(i, i + 1) for i in range(100, 160)]
     df = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graph.connected_components_star(df, "doc_a", "doc_b", max_iter=1)
+    with cc_path(spark, "distributed"), pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components(df, "doc_a", "doc_b", max_iter=1)
 
 
 def test_star_cc_rejects_nonpositive_max_iter(spark):
-    import pytest
-
     df = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="max_iter"):
-        graph.connected_components_star(df, "doc_a", "doc_b", max_iter=0)
+    with cc_path(spark, "distributed"), pytest.raises(ValueError, match="max_iter"):
+        graph.connected_components(df, "doc_a", "doc_b", max_iter=0)
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)],
+        [(i, i + 1) for i in range(100, 159)],
+        [(1, 2), (2, 1), (1, 2), (3, 2), (7, 8), (8, 7)],
+        [(1, 2), (2, 2), (5, 5), (3, 3), (3, 4), (None, 6)],
+        [],
+    ],
+    ids=["mixed", "chain60", "dup_reversed", "self_loop_null", "empty"],
+)
+def test_cc_paths_agree(spark, edges):
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    out = {}
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            got = graph.connected_components(df, "doc_a", "doc_b")
+        out[path] = (got.schema, sorted(got.collect()))
+    assert out["driver"] == out["distributed"]
+    assert [(f.dataType.simpleString(), f.nullable) for f in out["driver"][0]] == [
+        ("bigint", True), ("bigint", True)]
 
 
 def test_mixture_resampling_hits_target_proportions(spark):
@@ -219,11 +230,10 @@ def test_weighted_sample_extremes(spark):
 
 
 def test_cc_rejects_nonpositive_max_iter(spark):
-    import pytest
-
     df = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="max_iter"):
-        graph.connected_components(df, "doc_a", "doc_b", max_iter=0)
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path), pytest.raises(ValueError, match="max_iter"):
+            graph.connected_components(df, "doc_a", "doc_b", max_iter=0)
 
 
 def test_mixture_resampling_absent_source_yields_empty(spark):

@@ -3,9 +3,11 @@ Spark job per example, few examples (Spark round-trips are the cost).
 """
 
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from conftest import cc_path
 from yelp_data_pipeline_spark.operators import dedup as dd
 from yelp_data_pipeline_spark.operators.joins import asof_join
 from yelp_data_pipeline_spark.operators.upsert import merge_upsert_df
@@ -95,6 +97,7 @@ def test_winnowing_shared_substring_guarantee(spark, prefix, shared, suffix):
     assert fps[1] & fps[2], f"no shared fingerprint for shared run {shared}"
 
 
+@pytest.mark.parametrize("path", ["driver", "distributed"])
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(
@@ -105,37 +108,33 @@ def test_winnowing_shared_substring_guarantee(spark, prefix, shared, suffix):
     )
 )
 @settings(**SETTINGS)
-def test_connected_components_match_union_find(spark, edges):
+def test_connected_components_match_union_find(spark, path, edges):
     from yelp_data_pipeline_spark.operators.graph import connected_components
 
-    norm = [(min(a, b), max(a, b)) for a, b in edges]
-    df = spark.createDataFrame(norm, "doc_a long, doc_b long")
-    got = {
-        r["node"]: r["cluster"]
-        for r in connected_components(df, "doc_a", "doc_b").collect()
-    }
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    with cc_path(spark, path):
+        got = {
+            r["node"]: r["cluster"]
+            for r in connected_components(df, "doc_a", "doc_b").collect()
+        }
 
-    # reference: plain union-find with path compression
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in norm:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    # union-find roots are not guaranteed minimal after unions; resolve
-    # each component to its true min member
-    comp_min: dict = {}
-    for n, r in want.items():
-        comp_min[r] = min(comp_min.get(r, n), n)
-    want = {n: comp_min[find(n)] for n in parent}
+    # reference: each component's min member, found by a walk over
+    # the adjacency lists (independent of the driver path's union-find)
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want: dict = {}
+    for start in sorted(adj):
+        if start in want:
+            continue
+        stack = [start]
+        want[start] = start
+        while stack:
+            for m in adj[stack.pop()]:
+                if m not in want:
+                    want[m] = start
+                    stack.append(m)
     assert got == want
 
 
@@ -312,51 +311,6 @@ def test_scd2_intervals_partition_history(spark, log):
             if not runs or runs[-1][0] != attr:
                 runs.append((attr, ts))
         assert [(r["attr"], r["valid_from"]) for r in versions] == runs
-
-
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(
-            lambda e: e[0] != e[1]
-        ),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(**SETTINGS)
-def test_star_components_match_union_find(spark, edges):
-    from yelp_data_pipeline_spark.operators.graph import (
-        connected_components_star,
-    )
-    from yelp_data_pipeline_spark.session import release_tracked
-
-    norm = [(min(a, b), max(a, b)) for a, b in edges]
-    df = spark.createDataFrame(norm, "doc_a long, doc_b long")
-    got = {
-        r["node"]: r["cluster"]
-        for r in connected_components_star(df, "doc_a", "doc_b").collect()
-    }
-    release_tracked()
-
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in norm:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp_min: dict = {}
-    for n in parent:
-        r = find(n)
-        comp_min[r] = min(comp_min.get(r, n), n)
-    want = {n: comp_min[find(n)] for n in parent}
-    assert got == want
 
 
 @given(

@@ -140,18 +140,16 @@ def split_range_column(
     )
 
 
-def detect_json_string_columns(
-    df: DataFrame, candidates: list[str], sample_rows: int | None = 256
-) -> list[str]:
+def detect_json_string_columns(df: DataFrame, candidates: list[str]) -> list[str]:
     """M3 — JSON-column detector (B2S:36-43), scale-fixed.
 
     The reference issues one ``filter(...).limit(1).collect()`` per
-    candidate column (a driver round-trip each). Here a single
-    aggregated pass computes, per column, whether any sampled non-null
-    value looks like a JSON object. ``sample_rows=None`` probes the
-    FULL relation (one combinable ANY-style aggregate — map-side
-    partial, no limit), used to confirm a negative sampled verdict
-    before callers commit to a "no JSON anywhere" posture.
+    candidate column (a driver round-trip each): a column is JSON if
+    ANY row holds a JSON object. Here one combinable max-aggregate over
+    the full relation (map-side partial) answers that for every
+    column at once. There is no LIMIT: Spark names each LIMIT's
+    generated counter from a JVM-wide sequence, so a limited probe
+    compiles new classes on every run.
     """
     if not candidates:
         return []
@@ -166,10 +164,7 @@ def detect_json_string_columns(
         ).alias(c)
         for c in candidates
     ]
-    scoped = df.select(candidates)
-    if sample_rows is not None:
-        scoped = scoped.limit(sample_rows * 16)
-    row = scoped.agg(*probes).first()
+    row = df.select(candidates).agg(*probes).first()
     return [c for c in candidates if row[c] == 1]
 
 

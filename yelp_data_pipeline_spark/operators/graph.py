@@ -7,25 +7,26 @@ if A~B and B~C, then {A,B,C} is one group and one survivor should be
 kept. ``connected_components`` turns a pair list into (node, cluster)
 labels; ``dedup_survivors`` picks min-id survivors per cluster.
 
-Scale posture: the iteration is plain label propagation ("hash-min"),
-each round a distributed join + min-aggregate; rounds needed = graph
-diameter. Near-dup graphs are overwhelmingly tiny star/clique
-clusters (diameter ≤ ~3), so convergence is fast. The converge-tested
-loops here (hash-min, star CC, k-core, BFS) share one round discipline,
-``_fixpoint``: a lazy localCheckpoint per round keeps plans flat and
-one count per round both materializes it and tests convergence. For
-adversarial long-chain graphs, the large-star/small-star algorithm
+Scale posture: ``connected_components`` counts the deduplicated edges
+once and picks its algorithm from that count. Near-dup graphs are
+hundreds to tens of thousands of edges; when the edge list fits under
+the session's broadcast threshold, union-find on the driver finishes
+in one collect. Larger graphs run the large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) halves the diameter per round; hash-min is the right default
-for dedup workloads.
+SoCC'14), which halves the diameter per round. The converge-tested
+loops here (star CC, k-core, BFS) share one round discipline,
+``_fixpoint``: a lazy localCheckpoint per round keeps plans flat and
+one count per round both materializes it and tests convergence.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 
@@ -83,130 +84,98 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
+    max_iter: int = 50,
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the
     minimum node id reachable from it (= component id).
 
-    Returns (node, cluster) for every node that appears in an edge.
-    Hash-min propagation: each round every node takes the min of its
-    own label and its neighbors' labels; fixpoint when no label
-    changes (checked with a distributed count — the only driver
-    round-trip, one scalar per round).
+    Returns (node, cluster) for every node of an edge ``(u, v)`` with
+    ``u != v``: self-loop-only nodes and NULL endpoints get no row, so
+    callers left-join the labels and coalesce a missing node to its own
+    id. Both columns have the input's id type.
 
-    Raises ``RuntimeError`` if ``max_iter`` rounds pass without
-    reaching the fixpoint (graph diameter > max_iter) — silently
-    returning half-propagated labels would mislabel components. Raise
-    ``max_iter`` (or switch to large-star/small-star, which halves the
-    diameter per round) for adversarial long-chain graphs.
+    The edges are deduplicated, persisted and counted once; the count
+    picks the algorithm, so no caller guesses the graph's diameter:
+
+    - If ``count × row width`` fits under the session's
+      ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark would
+      ship to every executor for a broadcast join), the edges are
+      collected and union-find with the smaller id as root finishes on
+      the driver. On dedup graphs (hundreds to tens of thousands of
+      edges) that replaces dozens of small Spark jobs with one collect.
+      A threshold of ``-1`` disables this path, as it disables
+      broadcast.
+    - Otherwise the alternating large-star/small-star algorithm
+      (Kiveris et al., "Connected Components in MapReduce and Beyond",
+      SoCC'14) runs through ``_fixpoint`` in O(log d) rounds. Per
+      round (plain joins/aggregates, edge-keyed shuffles) large-star
+      links every node's LARGER neighbors to m = min(neighborhood ∪
+      {u}), then small-star links its smaller-or-equal neighbors (and
+      itself) to their min. The fixpoint is reached when the edge set
+      stops changing, leaving depth-1 stars centered at component
+      minima; the test is ONE full-outer-join count (a row with either
+      side NULL ⇒ the edge sets differ).
+
+    Either way the returned relation carries none of the input's
+    lineage: a local relation, or an eager checkpoint of the label map.
+
+    Raises ``ValueError`` if ``max_iter < 1`` and ``RuntimeError`` if
+    the distributed path spends ``max_iter`` rounds without reaching
+    the fixpoint.
     """
-    # Symmetrize with ONE scan of the (often expensive — e.g. a whole
-    # MinHash-LSH pipeline) edge relation: explode each edge into both
-    # directions. A union of two selects would execute that subtree
-    # twice before the persist ever materializes.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    init_labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("cluster", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    def hashmin_round(prev: DataFrame) -> DataFrame:
-        labels = prev.select("node", "cluster")
-        # min label among each node's neighborhood (neighbors only;
-        # the node's own label joins back below).
-        nbr_min = (
-            sym.join(labels, sym["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("cluster").alias("nbr_cluster"))
-        )
-        return labels.join(nbr_min, labels["node"] == nbr_min["u"], "left").select(
-            "node",
-            F.least(
-                F.col("cluster"), F.coalesce("nbr_cluster", F.col("cluster"))
-            ).alias("cluster"),
-            (F.coalesce("nbr_cluster", F.col("cluster")) < F.col("cluster")).alias(
-                "__changed"
-            ),
-        )
-
-    try:
-        last, changed, rounds = _fixpoint(
-            hashmin_round,
-            lambda rel, _: rel.filter(F.col("__changed")).count(),
-            max_iter,
-            first=init_labels,
-        )
-    finally:
-        sym.unpersist()
-        init_labels.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {rounds} rounds "
-            f"({changed} labels still changing): graph diameter exceeds "
-            "max_iter; raise it or use connected_components_star "
-            "(O(log d) rounds)."
-        )
-    # The returned relation reads the final round's checkpoint blocks
-    # (materialized by its convergence count), so callers that fan it
-    # into several joins scan cached blocks, not a recompute.
-    return last.select("node", "cluster")
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components via the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — O(log d) rounds where hash-min needs d, so the
-    right tool when ``connected_components`` raises on an adversarial
-    long-chain graph. Same output contract: (node, cluster) with
-    cluster = the component's min node id, for every node in an edge.
-
-    Per round (all plain joins/aggregates, edge-keyed shuffles):
-    - large-star: every node u links its LARGER neighbors to
-      m = min(neighborhood ∪ {u});
-    - small-star: every node u links its smaller-or-equal neighbors
-      (and itself) to their min.
-    Fixpoint when the edge set stops changing; the result is a forest
-    of depth-1 stars centered at component minima.
-
-    Driver-round-trip economy: the fixpoint test is ONE
-    full-outer-join count (a row with either side NULL ⇒ edge sets
-    differ) instead of the count-then-anti-join pair.
-
-    Raises ``RuntimeError`` if ``max_iter`` rounds pass without
-    reaching the fixpoint.
-    """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    all_nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    all_nodes.count()
+    try:
+        n_edges = e.count()
+        spark = e.sparkSession
+        threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        # Spark's own row-size estimate: 8 bytes of row overhead plus
+        # each column's default size.
+        row_bytes = 8 + e._jdf.schema().defaultSize()
+        all_nodes = e.select(F.col("u").alias("node")).union(e.select("v")).distinct()
+        if n_edges * row_bytes <= threshold:
+            node = all_nodes.schema["node"]
+            schema = StructType([node, StructField("cluster", node.dataType, node.nullable)])
+            # A pandas frame goes through Arrow into a LocalRelation that
+            # the JVM scans directly; a list of tuples would become a
+            # Python RDD that starts Python workers on every scan.
+            labels = pd.DataFrame(_union_find(e.collect()), columns=["node", "cluster"])
+            return spark.createDataFrame(labels, schema)
+        return _star_labels(e, all_nodes, max_iter)
+    finally:
+        e.unpersist()
+
+
+def _union_find(pairs) -> list[tuple]:
+    """(node, min id of its component) for every endpoint of ``pairs``:
+    union-find with path compression, the smaller root winning each
+    union, so every root is its set's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in pairs:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(x, find(x)) for x in parent]
+
+
+def _star_labels(e: DataFrame, all_nodes: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed path of ``connected_components`` on its prelude's
+    persisted edge set ``e`` (u, v) and node set ``all_nodes``."""
 
     def star_round(cur: DataFrame) -> DataFrame:
         # ---- large-star ----
@@ -243,29 +212,22 @@ def connected_components_star(
             .count()
         )
 
-    try:
-        stars, changed, rounds = _fixpoint(star_round, edges_changed, max_iter, first=e)
-        if changed != 0:
-            raise RuntimeError(
-                f"alternating star did not converge in {rounds} rounds"
-            )
-        # Stars: (u → center). Centers and isolated-after-dedup nodes
-        # label themselves. Eagerly checkpoint the (tiny: one row per
-        # node) label map before releasing the loop relations: without
-        # the cut, every consumer of the returned frame embeds the full
-        # blocking/verify lineage of the ORIGINAL edge relation in its
-        # plan — customer_golden_records' three survivorship arms
-        # audited at 550 joins / 224 exchanges before this (round-10
-        # plan audit), ~30 after. One extra small job here buys a
-        # scan-sized plan for every downstream subtree.
-        return (
-            all_nodes.join(stars, all_nodes["node"] == stars["u"], "left")
-            .select("node", F.coalesce("v", F.col("node")).alias("cluster"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        e.unpersist()
-        all_nodes.unpersist()
+    stars, changed, rounds = _fixpoint(star_round, edges_changed, max_iter, first=e)
+    if changed != 0:
+        raise RuntimeError(f"alternating star did not converge in {rounds} rounds")
+    # Stars: (u → center). Centers and isolated-after-dedup nodes
+    # label themselves. Eagerly checkpoint the (tiny: one row per
+    # node) label map before the caller releases the edges: without
+    # the cut, every consumer of the returned frame embeds the full
+    # blocking/verify lineage of the ORIGINAL edge relation in its
+    # plan — customer_golden_records' three survivorship arms
+    # audited at 550 joins / 224 exchanges before this (round-10
+    # plan audit), ~30 after.
+    return (
+        all_nodes.join(stars, all_nodes["node"] == stars["u"], "left")
+        .select("node", F.coalesce("v", F.col("node")).alias("cluster"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def dedup_clusters(
@@ -398,8 +360,7 @@ def degree_assortativity(
     edges — positive means hubs link to hubs (social-network shape),
     negative means hubs link to leaves (hub-and-spoke
     infrastructure). For a dedup/co-occurrence graph it reads whether
-    duplication is one giant hub or a mesh — which decides whether
-    connected components need the O(log d) star variant.
+    duplication is one giant hub or a mesh.
 
     ``edges`` must be the UNIQUE undirected pair set; each edge enters
     the correlation in BOTH orientations (the standard symmetric

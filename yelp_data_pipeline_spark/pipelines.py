@@ -422,10 +422,12 @@ def curate_documents_job(
     gate → MinHash near-dup clustering → one survivor per cluster →
     Hive-partitioned parquet by language.
 
-    The whole chain is one declarative plan per stage; the only
-    driver round-trips are the connected-components convergence
-    scalars. Survivors are the cluster-min doc ids, so reruns are
-    deterministic. Output partitioning by ``lang`` makes the
+    The whole chain is one declarative plan per stage, except where
+    the connected-components step materializes the near-dup pairs:
+    it counts them and, when they fit the broadcast threshold,
+    collects them for union-find on the driver (otherwise it runs
+    one convergence count per distributed round). Survivors are the
+    cluster-min doc ids, so reruns are deterministic. Output partitioning by ``lang`` makes the
     downstream per-language sampling reads partition-pruned.
     """
     from .operators import dedup as dd

@@ -45,8 +45,9 @@ walk(node, label) AS (
 SELECT node AS doc_id, min(label) AS cluster_id FROM walk GROUP BY node
 """,
     doc="Connected components over MinHash near-dup pairs: pairs alone "
-    "can't pick survivors (A~B, B~C ⇒ {A,B,C} is ONE group) — hash-min "
-    "label propagation labels every doc with its component's min id; "
+    "can't pick survivors (A~B, B~C ⇒ {A,B,C} is ONE group) — "
+    "graph.connected_components labels every doc with its component's "
+    "min id; "
     "oracle = exact reachability via recursive CTE, so the check "
     "covers the transitive closure, not a banding replay.",
 )
@@ -297,10 +298,11 @@ walk(node, label) AS (
 )
 SELECT node AS doc_id, min(label) AS cluster_id FROM walk GROUP BY node
 """,
-    doc="Same clustering contract as dedup_clusters but via the "
-    "alternating large-star/small-star algorithm (O(log d) rounds vs "
-    "hash-min's d) — identical labels, so the identical recursive-CTE "
-    "oracle verifies both implementations agree on the transitive "
+    doc="The dedup_clusters pipeline under a second name, kept from "
+    "when the two ran different CC algorithms: graph.dedup_clusters "
+    "over the MinHash pairs, whose connected_components picks driver "
+    "union-find or distributed large-star/small-star from the edge "
+    "count. The identical recursive-CTE oracle checks the transitive "
     "closure.",
 )
 def q_dedup_clusters_star(spark, sf_dir):
@@ -308,14 +310,7 @@ def q_dedup_clusters_star(spark, sf_dir):
     pairs = dd.minhash_lsh_pairs(
         docs, "doc_id", "text", k=12, bands=4, threshold=0.8
     )
-    comp = graph.connected_components_star(pairs, "doc_a", "doc_b")
-    return (
-        docs.select(F.col("doc_id"))
-        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("cluster", F.col("doc_id")).alias("cluster_id")
-        )
-    )
+    return graph.dedup_clusters(docs, pairs)
 
 
 _SAMPLE_KEY_SQL = md5_long_sql("concat_ws('|', 'r2', CAST(doc_id AS VARCHAR))")

@@ -3377,7 +3377,8 @@ ORDER BY cluster_id
     "pipeline the tier was missing: blocking (sorted-neighborhood, "
     "customer_name_edit_pairs), pairwise verification (Levenshtein "
     "<= 2), transitive clustering (operators/graph.py:"
-    "connected_components_star - the oracle replays it as the "
+    "connected_components - union-find on the driver while the pair "
+    "graph fits the broadcast threshold; the oracle replays it as the "
     "recursive min-label walk, the dedup_clusters_star pattern), "
     "then ATTRIBUTE-level survivorship per entity: representative "
     "by max account balance (tie: min key) contributes name and "
@@ -3403,7 +3404,7 @@ def _golden_records(c):
         "c_name",
         2,
     ).select("doc_a", "doc_b")
-    comp = graph.connected_components_star(pairs, "doc_a", "doc_b")
+    comp = graph.connected_components(pairs, "doc_a", "doc_b")
     mem = c.join(
         comp.withColumnRenamed("node", "c_custkey"), "c_custkey", "left"
     ).withColumn(

@@ -1658,8 +1658,8 @@ FROM fin2
     "(minhash_recall_eval) can't see this — two pair sets can mostly "
     "agree while cutting the transitive closure differently, and the "
     "CLOSURE decides which docs a dedup pass deletes. Both label "
-    "relations come from the SAME hash-min CC machinery the dedup "
-    "tier uses; the oracle recomputes both closures via recursive "
+    "relations come from the SAME connected_components operator the "
+    "dedup tier uses; the oracle recomputes both closures via recursive "
     "CTEs. Contingency pair counts in exact DECIMAL(38,0)/HUGEINT "
     "(n(n-1) ~ 1e24 at 1e12 docs); RI/ARI fixed IEEE sequences on "
     "exact parts, 6dp; ARI NULL when degenerate. Eval-tier cost: "
@@ -1670,8 +1670,6 @@ FROM fin2
     "run on an md5 document sample (the simhash_recall_eval recipe)",
 )
 def q_dedup_cluster_rand_index(spark, sf_dir):
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = _t(spark, sf_dir, "documents")
     pairs_lsh = dd.minhash_lsh_pairs(
         docs, "doc_id", "text", k=12, bands=4, threshold=0.8
@@ -1679,17 +1677,9 @@ def q_dedup_cluster_rand_index(spark, sf_dir):
     pairs_ex = dd.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.8, max_doc_freq=None
     )
-    # The two cluster arms are independent DRIVER-PACED loops (each
-    # dedup_clusters runs an eager hash-min fixpoint); built
-    # sequentially the second arm's rounds wait on the first's tail —
-    # two driver threads overlap them so each arm's small jobs
-    # back-fill the other's idle capacity (guide §2.6). Results are
-    # unchanged: each arm is deterministic and they share no state.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(graph.dedup_clusters, docs, pairs_lsh)
-        fb = pool.submit(graph.dedup_clusters, docs, pairs_ex)
-        la, lb = fa.result(), fb.result()
-    return graph.clustering_rand_index(la, lb)
+    return graph.clustering_rand_index(
+        graph.dedup_clusters(docs, pairs_lsh), graph.dedup_clusters(docs, pairs_ex)
+    )
 
 
 @_q(
@@ -2314,8 +2304,8 @@ FROM m
     "(operators/graph.py:degree_assortativity; Newman 2002): Pearson "
     "over endpoint degrees, both orientations per undirected edge — "
     "positive = hubs link hubs, negative = hub-and-spoke; on a dedup/"
-    "co-occurrence graph this decides whether CC needs the O(log d) "
-    "star variant. Shares the exact edge construction the triangle/"
+    "co-occurrence graph this reads whether duplication is one giant "
+    "hub or a mesh. Shares the exact edge construction the triangle/"
     "k-core queries verify; integer degrees, DECIMAL(38,0)/HUGEINT "
     "moments, one IEEE tail; degree-regular graphs NULL-guarded.",
 )

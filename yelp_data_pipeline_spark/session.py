@@ -57,8 +57,10 @@ def release_tracked(blocking: bool = False) -> int:
     only that slice) rather than sharing this global.
 
     Only :func:`track_persist` relations are released. Blocks of a
-    ``localCheckpoint`` — :func:`cut_lineage` and the connected-
-    components rounds in operators/graph.py — are not tracked here:
+    ``localCheckpoint`` — :func:`cut_lineage` and the rounds and
+    labels of the distributed connected-components path in
+    operators/graph.py (its driver path checkpoints nothing) — are
+    not tracked here:
     they stay until their RDD is garbage-collected or the session
     stops."""
     n = 0
