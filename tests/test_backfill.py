@@ -304,6 +304,43 @@ def test_first_month_without_reviews_on_fresh_warehouse(spark, bronze, tmp_path)
                            "fact_checkin": 1}
 
 
+
+def test_crash_in_gold_merge_swap_recovers_on_rerun(spark, bronze, tmp_path, monkeypatch):
+    """A gold MERGE that dies at the rename putting the merged table in
+    place loses nothing: re-running the month leaves gold equal to a
+    clean run. Month 2's business snapshot drops b2, so a MERGE that
+    restarted from month 2's updates alone would lose b2's rows."""
+    month2 = str(tmp_path / "bronze2")
+    shutil.copytree(bronze, month2)
+    with open(f"{month2}/business/b.json") as f:
+        b1 = [json.loads(line) for line in f if '"b1"' in line]
+    _w(f"{month2}/business/b.json", b1)
+    upserted = {"dim_business", "dim_user", "bridge_business_category"}
+
+    def months(root, crash):
+        silver, gold = str(tmp_path / root / "silver"), str(tmp_path / root / "gold")
+        pipelines.bronze_to_silver(spark, bronze, silver, 2021, 1)
+        pipelines.silver_to_gold(spark, silver, gold, 2021, 1)
+        pipelines.bronze_to_silver(spark, month2, silver, 2021, 2)
+        if crash:
+            rename = os.rename
+
+            def failing_rename(src, dst):
+                if os.path.dirname(dst) == gold and os.path.basename(dst) in upserted:
+                    raise OSError(f"injected failure renaming {src} to {dst}")
+                rename(src, dst)
+
+            monkeypatch.setattr(os, "rename", failing_rename)
+            with pytest.raises(OSError, match="injected failure"):
+                pipelines.silver_to_gold(spark, silver, gold, 2021, 2)
+            monkeypatch.setattr(os, "rename", rename)
+        pipelines.silver_to_gold(spark, silver, gold, 2021, 2)
+        return _table_state(spark, gold)
+
+    clean = months("clean", crash=False)
+    assert len(clean["dim_business"]) == 2
+    assert months("crashed", crash=True) == clean
+
 def test_type_drifted_bronze_row_aborts_the_backfill(spark, bronze, tmp_path):
     """A declared bronze source is read FAILFAST: a review whose stars is
     not a number fails bronze_to_silver (rather than widening or nulling

@@ -1,6 +1,7 @@
 """Dedup-family invariants on tiny corpora (SURVEY.md §5.2/§5.4)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from yelp_data_pipeline_spark.operators import dedup as dd
 
@@ -68,11 +69,18 @@ def test_simhash_banding_is_lossless_at_radius(spark):
 
 
 def test_simhash_respects_max_radius_guard(spark):
-    import pytest
-
     df = _docs(spark, [(1, "a b")])
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="max_hamming=7"):
         dd.simhash_pairs(df, "doc_id", "text", max_hamming=7)
+
+
+@pytest.mark.parametrize("band_bits", [7, 16])
+def test_simhash_pairs_rejects_band_width_out_of_range(spark, band_bits):
+    """A ValueError, not an assert: ``python -O`` strips asserts, and a
+    band width outside [8, 15] would then build a lossy banding."""
+    df = _docs(spark, [(1, "a b")])
+    with pytest.raises(ValueError, match=f"band_bits={band_bits}"):
+        dd.simhash_pairs(df, "doc_id", "text", band_bits=band_bits)
 
 
 def test_ngram_stop_shingle_cap_reduces_candidates(spark):

@@ -319,41 +319,6 @@ class TestIvfNprobeCurve:
             assert r["total_hits"] <= r["n_queries"] * 10
 
 
-class TestScalableUniqueRanks:
-    def test_matches_global_row_number(self, spark):
-        import pyspark.sql.functions as F
-        from pyspark.sql import Window
-        from yelp_data_pipeline_spark.operators.windows import (
-            scalable_unique_ranks,
-        )
-
-        rows = [(i, (i * 37) % 11) for i in range(500)]  # heavy ties
-        df = spark.createDataFrame(rows, ["rid", "v"])
-        got = {
-            r["rid"]: r["rn"]
-            for r in scalable_unique_ranks(df, "v", "rid").collect()
-        }
-        w = Window.orderBy("v", "rid")
-        want = {
-            r["rid"]: r["rn"]
-            for r in df.withColumn("rn", F.row_number().over(w)).collect()
-        }
-        assert got == want
-
-    def test_lift_twin_equals_baseline(self, spark):
-        from yelp_data_pipeline_spark.queries import (
-            q_quality_score_lift,
-            q_quality_score_lift_scalable,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        base = sorted(map(tuple, q_quality_score_lift(spark, sf).collect()))
-        scal = sorted(
-            map(tuple, q_quality_score_lift_scalable(spark, sf).collect())
-        )
-        assert base == scal
-
-
 class TestLayoutPruningEval:
     def test_zorder_beats_single_column_layouts(self, spark):
         from yelp_data_pipeline_spark.queries import q_layout_pruning_eval

@@ -271,25 +271,6 @@ def test_kmv_set_estimates_exact_small_and_accurate_large(spark):
     assert abs(r2["est_a"] - 5000) / 5000 < 0.15
 
 
-def test_global_row_numbers_exact_and_dense(spark):
-    from yelp_data_pipeline_spark.operators.windows import global_row_numbers
-
-    import random
-
-    rng = random.Random(7)
-    rows = [(i, f"k{rng.randrange(10**6):06d}") for i in range(1000)]
-    df = spark.createDataFrame(rows, ["id", "key"]).repartition(8)
-    got = {
-        r["id"]: r["rn"]
-        for r in global_row_numbers(df, ["key", "id"]).collect()
-    }
-    want = {
-        id_: i + 1
-        for i, (id_, _) in enumerate(sorted(rows, key=lambda t: (t[1], t[0])))
-    }
-    assert got == want
-
-
 def test_sorted_neighborhood_pairs_match_python(spark):
     from yelp_data_pipeline_spark.operators.dedup import (
         sorted_neighborhood_pairs,
@@ -691,22 +672,6 @@ def test_cdc_chunks_resync_after_insertion(spark):
         assert spans[0][0] == 1
         for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
             assert s2 == e1 + 1
-
-
-def test_global_row_numbers_empty_input(spark):
-    from yelp_data_pipeline_spark.operators.windows import global_row_numbers
-    from yelp_data_pipeline_spark.operators.dedup import (
-        sorted_neighborhood_pairs,
-    )
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert global_row_numbers(
-        empty.select(F.col("doc_id").alias("__id"), F.col("text").alias("__k")),
-        ["__k", "__id"],
-    ).count() == 0
-    assert sorted_neighborhood_pairs(
-        empty, "doc_id", F.lower(F.col("text"))
-    ).count() == 0
 
 
 def test_quantile_bins_and_drift_null_policy(spark):

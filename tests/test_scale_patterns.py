@@ -3,6 +3,7 @@ binned range joins, stateful streaming — each asserted on PLAN SHAPE
 as well as results, since the plan is the point."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from yelp_data_pipeline_spark.operators.aggregates import salted_group_count
 from yelp_data_pipeline_spark.operators.joins import range_join_binned
@@ -292,3 +293,111 @@ def test_transform_with_state_zscore_flagger(spark, tmp_path):
         state[k] = (n + 1, s + x, s2 + x * x)
     assert got == want
     assert ("u1", 500.0) in got and not any(k == "u3" for k, _ in got)
+
+
+def test_global_row_numbers_exact_and_dense(spark):
+    from yelp_data_pipeline_spark.operators.windows import global_row_numbers
+
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, f"k{rng.randrange(10**6):06d}") for i in range(1000)]
+    df = spark.createDataFrame(rows, ["id", "key"]).repartition(8)
+    got = {
+        r["id"]: r["rn"]
+        for r in global_row_numbers(df, ["key", "id"]).collect()
+    }
+    want = {
+        id_: i + 1
+        for i, (id_, _) in enumerate(sorted(rows, key=lambda t: (t[1], t[0])))
+    }
+    assert got == want
+
+
+def test_global_row_numbers_empty_input(spark):
+    from yelp_data_pipeline_spark.operators.windows import global_row_numbers
+    from yelp_data_pipeline_spark.operators.dedup import (
+        sorted_neighborhood_pairs,
+    )
+
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    assert global_row_numbers(
+        empty.select(F.col("doc_id").alias("__id"), F.col("text").alias("__k")),
+        ["__k", "__id"],
+    ).count() == 0
+    assert sorted_neighborhood_pairs(
+        empty, "doc_id", F.lower(F.col("text"))
+    ).count() == 0
+
+
+class TestScalableUniqueRanks:
+    def test_matches_global_row_number(self, spark):
+        import pyspark.sql.functions as F
+        from pyspark.sql import Window
+        from yelp_data_pipeline_spark.operators.windows import (
+            scalable_unique_ranks,
+        )
+
+        rows = [(i, (i * 37) % 11) for i in range(500)]  # heavy ties
+        df = spark.createDataFrame(rows, ["rid", "v"])
+        got = {
+            r["rid"]: r["rn"]
+            for r in scalable_unique_ranks(df, "v", "rid").collect()
+        }
+        w = Window.orderBy("v", "rid")
+        want = {
+            r["rid"]: r["rn"]
+            for r in df.withColumn("rn", F.row_number().over(w)).collect()
+        }
+        assert got == want
+
+    def test_lift_twin_equals_baseline(self, spark):
+        from yelp_data_pipeline_spark.queries import (
+            q_quality_score_lift,
+            q_quality_score_lift_scalable,
+        )
+
+        sf = SF_DIR
+        base = sorted(map(tuple, q_quality_score_lift(spark, sf).collect()))
+        scal = sorted(
+            map(tuple, q_quality_score_lift_scalable(spark, sf).collect())
+        )
+        assert base == scal
+
+
+# Spark jobs each distributed-rank operator submits while it BUILDS
+# its plan (the range partitioner's boundary sample and the bounded
+# per-partition subtotal collect), on a 40-row frame with 5 distinct
+# values and on an empty one.
+_RANK_BUILD_JOBS = {
+    "scalable_ranks": (6, 2),
+    "scalable_unique_ranks": (6, 2),
+    "scalable_unique_ranks_total": (6, 2),
+    "global_row_numbers": (5, 3),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RANK_BUILD_JOBS))
+def test_rank_operator_build_jobs(spark, op):
+    from conftest import jobs_during
+    from yelp_data_pipeline_spark.operators import windows as win
+    from yelp_data_pipeline_spark.session import release_tracked
+
+    build = {
+        "scalable_ranks": lambda d: win.scalable_ranks(d, "v", "k", n_tiles=3),
+        "scalable_unique_ranks": lambda d: win.scalable_unique_ranks(d, "v", "k"),
+        "scalable_unique_ranks_total": lambda d: win.scalable_unique_ranks(
+            d, "v", "k", attach_total_col="n"
+        ),
+        "global_row_numbers": lambda d: win.global_row_numbers(d, ["v", "k"]),
+    }[op]
+    got = []
+    for n in (40, 0):
+        d = spark.createDataFrame(
+            [(i, (i * 7) % 5) for i in range(n)], "k long, v long"
+        )
+        out, jobs = jobs_during(spark, lambda: build(d))
+        assert out.count() == n
+        release_tracked()
+        got.append(jobs)
+    assert tuple(got) == _RANK_BUILD_JOBS[op]

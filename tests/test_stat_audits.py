@@ -11,6 +11,7 @@ import pytest
 from yelp_data_pipeline_spark.operators import aggregates as agg
 from yelp_data_pipeline_spark.operators import quality as dq
 from yelp_data_pipeline_spark.operators import textops as tx
+from yelp_data_pipeline_spark.operators import timeseries as ts
 
 
 def test_benford_hand_case(spark):
@@ -458,3 +459,112 @@ def test_assortativity_hand_cases(spark):
     df = spark.createDataFrame(edges, "a long, b long")
     got = degree_assortativity(df).collect()[0]["assortativity"]
     assert got == pytest.approx(round(expect, 6), abs=1e-6)
+
+
+def test_grouped_ranksum_guards_and_direction(spark):
+    # Type "up" shifts upward late (auc < 0.5 means a below b);
+    # type "onesided" has no late rows -> NULL auc/z.
+    rows = (
+        [("up", "2024-01-10 00:00:00", float(v)) for v in (1, 2, 3)]
+        + [("up", "2024-01-20 00:00:00", float(v)) for v in (10, 11, 12)]
+        + [("onesided", "2024-01-10 00:00:00", 5.0)] * 3
+    )
+    df = spark.createDataFrame(
+        rows, "event_type string, ts string, value double"
+    ).select(
+        "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
+    )
+    out = {
+        r["event_type"]: r
+        for r in ts.ranksum_drift(
+            df, "ts", "value", "2024-01-16", group_col="event_type"
+        ).collect()
+    }
+    assert out["up"]["auc"] == pytest.approx(0.0)  # complete separation
+    assert out["up"]["z"] < 0
+    assert out["onesided"]["n_b"] == 0
+    assert out["onesided"]["auc"] is None and out["onesided"]["z"] is None
+
+
+def test_wasserstein_by_group_hand_cases(spark):
+    rows = (
+        # Type A: +1 uniform shift -> W1 = 1. Type B: identical -> 0.
+        # Type C: single distinct value both sides -> 0. Type D: empty
+        # late side -> NULL.
+        [("A", "2024-01-10 00:00:00", v) for v in (1.0, 2.0)]
+        + [("A", "2024-01-20 00:00:00", v) for v in (2.0, 3.0)]
+        + [("B", "2024-01-10 00:00:00", 5.0), ("B", "2024-01-20 00:00:00", 5.0),
+           ("B", "2024-01-10 00:00:00", 7.0), ("B", "2024-01-20 00:00:00", 7.0)]
+        + [("C", "2024-01-10 00:00:00", 4.0), ("C", "2024-01-20 00:00:00", 4.0)]
+        + [("D", "2024-01-10 00:00:00", 9.0)]
+    )
+    df = spark.createDataFrame(
+        rows, "event_type string, ts_s string, value double"
+    ).select("event_type", F.col("ts_s").cast("timestamp").alias("ts"), "value")
+    out = {
+        r["event_type"]: r
+        for r in ts.wasserstein_drift(
+            df, "ts", "value", "2024-01-16", group_col="event_type"
+        ).collect()
+    }
+    assert out["A"]["w1"] == pytest.approx(1.0)
+    assert out["B"]["w1"] == pytest.approx(0.0)
+    assert out["C"]["w1"] == pytest.approx(0.0)
+    assert out["D"]["w1"] is None and out["D"]["n_b"] == 0
+    # Grouped result must agree with the global operator run per type.
+    solo = ts.wasserstein_drift(
+        df.where(F.col("event_type") == "A"), "ts", "value", "2024-01-16"
+    ).collect()[0]
+    assert out["A"]["w1"] == solo["w1"]
+
+
+_BIGINT, _DOUBLE = "bigint", "double"
+# (name, type, nullable) of each drift statistic's output: global,
+# then per group.
+_DRIFT_SCHEMAS = {
+    "ranksum": (
+        [("n_a", _BIGINT, True), ("n_b", _BIGINT, True), ("u2", _BIGINT, True),
+         ("auc", _DOUBLE, True), ("z", _DOUBLE, True)],
+        [("g", "string", True), ("n_a", _BIGINT, True), ("n_b", _BIGINT, True),
+         ("auc", _DOUBLE, True), ("z", _DOUBLE, True)],
+    ),
+    "wasserstein": (
+        [("n_a", _BIGINT, True), ("n_b", _BIGINT, True), ("w1", _DOUBLE, True)],
+        [("g", "string", True), ("n_a", _BIGINT, True), ("n_b", _BIGINT, True),
+         ("w1", _DOUBLE, True)],
+    ),
+}
+
+
+@pytest.mark.parametrize("stat", ["ranksum", "wasserstein"])
+def test_drift_global_equals_single_group(spark, stat):
+    """``group_col=None`` is the one-group case of the grouped scan:
+    same numbers (the global ranksum row also carries ``u2``), the
+    pinned schemas, and the two empty-input contracts — one all-NULL
+    row globally, no row per group."""
+    fn = {"ranksum": ts.ranksum_drift, "wasserstein": ts.wasserstein_drift}[stat]
+    rows = (
+        [("x", "2024-01-10 00:00:00", v) for v in (1.0, 2.5, 2.5, 4.0, None)]
+        + [("x", "2024-01-20 00:00:00", v) for v in (2.5, 3.0, 6.25)]
+    )
+    df = spark.createDataFrame(rows, "g string, ts_s string, value double").select(
+        "g", F.col("ts_s").cast("timestamp").alias("ts"), "value"
+    )
+    cut = "2024-01-16"
+    glob = fn(df, "ts", "value", cut)
+    grouped = fn(df, "ts", "value", cut, group_col="g")
+    fields = lambda d: [  # noqa: E731
+        (f.name, f.dataType.simpleString(), f.nullable) for f in d.schema
+    ]
+    assert (fields(glob), fields(grouped)) == _DRIFT_SCHEMAS[stat]
+
+    (g_row,) = glob.collect()
+    (x_row,) = grouped.collect()
+    assert x_row["g"] == "x" and x_row["n_a"] == 4 and x_row["n_b"] == 3
+    assert [g_row[c] for c in grouped.columns[1:]] == list(x_row)[1:]
+
+    empty = df.limit(0)
+    assert [tuple(r) for r in fn(empty, "ts", "value", cut).collect()] == [
+        (None,) * len(glob.columns)
+    ]
+    assert fn(empty, "ts", "value", cut, group_col="g").collect() == []

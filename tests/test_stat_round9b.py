@@ -255,31 +255,6 @@ def test_cohens_d_hand_case(spark):
     )
 
 
-def test_grouped_ranksum_guards_and_direction(spark):
-    # Type "up" shifts upward late (auc < 0.5 means a below b);
-    # type "onesided" has no late rows -> NULL auc/z.
-    rows = (
-        [("up", "2024-01-10 00:00:00", float(v)) for v in (1, 2, 3)]
-        + [("up", "2024-01-20 00:00:00", float(v)) for v in (10, 11, 12)]
-        + [("onesided", "2024-01-10 00:00:00", 5.0)] * 3
-    )
-    df = spark.createDataFrame(
-        rows, "event_type string, ts string, value double"
-    ).select(
-        "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
-    out = {
-        r["event_type"]: r
-        for r in ts.grouped_ranksum_drift(
-            df, "event_type", "ts", "value", "2024-01-16"
-        ).collect()
-    }
-    assert out["up"]["auc"] == pytest.approx(0.0)  # complete separation
-    assert out["up"]["z"] < 0
-    assert out["onesided"]["n_b"] == 0
-    assert out["onesided"]["auc"] is None and out["onesided"]["z"] is None
-
-
 def test_chao1_hand_case(spark):
     # Tokens: a a b c -> counts {a:2, b:1, c:1}: d=3, N=4, f1=2, f2=1.
     # chao1 = 3 + 2*1/(2*2) = 3.5; unseen = 2/4.
@@ -814,38 +789,6 @@ def test_golden_records_planted_duplicates(spark):
     assert s["top_segment"] == "FURN"
     # Invariant: every source row lands in exactly one golden record.
     assert sum(r["n_members"] for r in out.values()) == len(rows)
-
-
-def test_wasserstein_by_group_hand_cases(spark):
-    rows = (
-        # Type A: +1 uniform shift -> W1 = 1. Type B: identical -> 0.
-        # Type C: single distinct value both sides -> 0. Type D: empty
-        # late side -> NULL.
-        [("A", "2024-01-10 00:00:00", v) for v in (1.0, 2.0)]
-        + [("A", "2024-01-20 00:00:00", v) for v in (2.0, 3.0)]
-        + [("B", "2024-01-10 00:00:00", 5.0), ("B", "2024-01-20 00:00:00", 5.0),
-           ("B", "2024-01-10 00:00:00", 7.0), ("B", "2024-01-20 00:00:00", 7.0)]
-        + [("C", "2024-01-10 00:00:00", 4.0), ("C", "2024-01-20 00:00:00", 4.0)]
-        + [("D", "2024-01-10 00:00:00", 9.0)]
-    )
-    df = spark.createDataFrame(
-        rows, "event_type string, ts_s string, value double"
-    ).select("event_type", F.col("ts_s").cast("timestamp").alias("ts"), "value")
-    out = {
-        r["event_type"]: r
-        for r in ts.wasserstein_by_group(
-            df, "ts", "value", "event_type", "2024-01-16"
-        ).collect()
-    }
-    assert out["A"]["w1"] == pytest.approx(1.0)
-    assert out["B"]["w1"] == pytest.approx(0.0)
-    assert out["C"]["w1"] == pytest.approx(0.0)
-    assert out["D"]["w1"] is None and out["D"]["n_b"] == 0
-    # Grouped result must agree with the global operator run per type.
-    solo = ts.wasserstein_drift(
-        df.where(F.col("event_type") == "A"), "ts", "value", "2024-01-16"
-    ).collect()[0]
-    assert out["A"]["w1"] == solo["w1"]
 
 
 def test_bfs_hops_path_and_disconnected(spark):

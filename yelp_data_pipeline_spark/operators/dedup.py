@@ -782,14 +782,24 @@ def simhash_pairs(
     corpus sizes the rule instantiates 8 bits = the original 56-bit
     signature, which is what the registry oracle unrolls.
     """
-    assert max_hamming < SIMHASH_BANDS, "banding is lossy beyond bands-1 bits"
+    # Not asserts: under ``python -O`` an assert is stripped and a bad
+    # radius or band width would silently LOSE pairs.
+    if max_hamming >= SIMHASH_BANDS:
+        raise ValueError(
+            f"max_hamming={max_hamming} must be < {SIMHASH_BANDS} bands: "
+            "banding is lossy beyond bands-1 bits"
+        )
     from ..session import track_persist
 
     if band_bits is None:
         band_bits = adaptive_simhash_band_bits(
             df.count(), target_bucket_size
         )
-    assert SIMHASH_BAND_BITS <= band_bits <= SIMHASH_MAX_BAND_BITS
+    if not SIMHASH_BAND_BITS <= band_bits <= SIMHASH_MAX_BAND_BITS:
+        raise ValueError(
+            f"band_bits={band_bits} must be in "
+            f"[{SIMHASH_BAND_BITS}, {SIMHASH_MAX_BAND_BITS}]"
+        )
     bands_lo = min(60 // band_bits, SIMHASH_BANDS)
     bands_hi = SIMHASH_BANDS - bands_lo
     lo_bits, hi_bits = bands_lo * band_bits, bands_hi * band_bits

@@ -678,11 +678,50 @@ def cusum_changepoint_daily(df: DataFrame, ts_col: str) -> DataFrame:
     )
 
 
+def _drift_cells(
+    df: DataFrame,
+    ts_col: str,
+    value_col: str,
+    cutoff: str,
+    group_col: str | None = None,
+) -> DataFrame:
+    """The drift battery's shared cells step: one row per distinct
+    (group, cents value) with its early/late counts ``(v, ta, tb)``,
+    ``ta`` counting rows before ``cutoff``. Values become integer
+    cents (one IEEE multiply/add/floor), so the relation is bounded by
+    the value DOMAIN (2-decimal values in [0, ~500] => <= ~50k cells
+    per group) no matter how many rows flow in; NULL values drop. The
+    group key, when given, is the leading column ``g``."""
+    cents = F.floor(
+        F.col(value_col).cast("double") * F.lit(100.0) + F.lit(0.5)
+    ).cast("long")
+    is_a = (F.col(ts_col) < F.lit(cutoff).cast("timestamp")).cast("int")
+    g = [F.col(group_col).alias("g")] if group_col else []
+    return (
+        df.where(F.col(value_col).isNotNull())
+        .select(*g, cents.alias("v"), is_a.alias("a"))
+        .groupBy(*(["g"] if group_col else []), "v")
+        .agg(
+            F.sum("a").cast("long").alias("ta"),
+            F.sum(F.lit(1) - F.col("a")).cast("long").alias("tb"),
+        )
+    )
+
+
+def _per_group(out: DataFrame, group_col: str | None, *cols) -> DataFrame:
+    """Select ``cols``; with a group, lead with ``g`` renamed back to
+    ``group_col`` and order by it (a global result is one row)."""
+    if group_col is None:
+        return out.select(*cols)
+    return out.select(F.col("g").alias(group_col), *cols).orderBy(group_col)
+
+
 def ranksum_drift(
     df: DataFrame,
     ts_col: str,
     value_col: str,
     cutoff: str,
+    group_col: str | None = None,
 ) -> DataFrame:
     """Mann-Whitney U rank-sum test between the value distributions
     before and after ``cutoff`` — the nonparametric SIGNIFICANCE
@@ -690,54 +729,51 @@ def ranksum_drift(
     how far apart two windows are, the rank-sum z says whether the
     shift is larger than chance for distributions of this size, with
     no normality assumption (Mann & Whitney 1947, tie-corrected
-    normal approximation).
+    normal approximation). With ``group_col`` it is the per-group
+    triage scan: WHICH groups carry a corpus-level shift, including
+    offsetting per-group drifts the global test averages away.
 
-    Exact construction: values become integer cents (single IEEE
-    multiply/add/floor), so the distinct-value relation is bounded by
-    the value DOMAIN (2-decimal values in [0, ~500] => <= ~50k cells)
-    no matter how many rows flow in — the ordered window computing
-    counts-below runs over that bounded relation, not the facts, which
-    is why a single ordered window is scale-safe here (contrast
-    windows.scalable_ranks, which exists for UNBOUNDED-domain ranks).
-    Tie handling is the average-rank convention folded into exact
-    integers: 2*R_a = sum(t_a * (2*cb + t + 1)) over cells, kept in
+    Exact construction: the counts-below window runs over the
+    domain-bounded cells of :func:`_drift_cells` (partitioned by the
+    group, if any), not the facts, which is why a single ordered
+    window is scale-safe here (contrast windows.scalable_ranks, which
+    exists for UNBOUNDED-domain ranks). Tie handling is the
+    average-rank convention folded into exact integers:
+    2*R_a = sum(t_a * (2*cb + t + 1)) over cells, kept in
     DECIMAL(38,0)/HUGEINT (t_a*cb overflows int64 once n passes ~1e9,
     i.e. precisely the 100 TB regime). The tie-corrected variance
     sigma^2 = (n_a*n_b/12) * ((n+1) - sum(t^3-t)/(n*(n-1))) and
     z = (2U - n_a*n_b) / (2*sigma) are fixed sequences of
     correctly-rounded IEEE ops on exactly-represented integers.
 
-    Returns ONE row: (n_a, n_b, u2 = 2*U_a, auc, z), 6dp floats.
-    ``auc`` = U_a/(n_a*n_b) is the tie-adjusted common-language effect
-    size (probability-of-superiority / ROC-AUC reading): 0.5 = no
-    shift, bounded and scale-free — the number to act on; z says
-    whether it beats chance. ``u2`` stays exact int64 through any
-    realistic window (2U <= n_a*n_b ~ n^2/4 passes int64 only beyond
-    ~6e9 rows per window; auc and z remain exact-ratio doubles there).
+    Global: ONE row (n_a, n_b, u2 = 2*U_a, auc, z), 6dp floats — all
+    NULL counts on empty input. Grouped: (group, n_a, n_b, auc, z)
+    ordered by group, no row on empty input. ``auc`` = U_a/(n_a*n_b)
+    is the tie-adjusted common-language effect size
+    (probability-of-superiority / ROC-AUC reading): 0.5 = no shift,
+    bounded and scale-free — the number to act on; z says whether it
+    beats chance. ``u2`` stays exact int64 through any realistic
+    window (2U <= n_a*n_b ~ n^2/4 passes int64 only beyond ~6e9 rows
+    per window; auc and z remain exact-ratio doubles there). A
+    one-sided window yields NULL auc/z and zero variance (all values
+    tied) NULL z, never a 0/0.
     """
     from pyspark.sql import Window
 
-    cents = F.floor(
-        F.col(value_col).cast("double") * F.lit(100.0) + F.lit(0.5)
-    ).cast("long")
-    is_a = F.col(ts_col) < F.lit(cutoff).cast("timestamp")
-    cells = (
-        df.where(F.col(value_col).isNotNull())
-        .select(cents.alias("v"), is_a.cast("int").alias("a"))
-        .groupBy("v")
-        .agg(
-            F.count(F.lit(1)).alias("t"),
-            F.sum("a").cast("long").alias("t_a"),
-        )
+    g = ["g"] if group_col else []
+    cells = _drift_cells(df, ts_col, value_col, cutoff, group_col)
+    w = Window.partitionBy(*g).orderBy("v").rowsBetween(
+        Window.unboundedPreceding, -1
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = cells.withColumn("cb", F.coalesce(F.sum("t").over(w), F.lit(0)))
+    ranked = cells.withColumn("t", F.col("ta") + F.col("tb")).withColumn(
+        "cb", F.coalesce(F.sum("t").over(w), F.lit(0))
+    )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    out = ranked.agg(
-        F.sum("t_a").cast("long").alias("n_a"),
-        (F.sum("t") - F.sum("t_a")).cast("long").alias("n_b"),
+    out = ranked.groupBy(*g).agg(
+        F.sum("ta").cast("long").alias("n_a"),
+        F.sum("tb").cast("long").alias("n_b"),
         F.sum(
-            dec(F.col("t_a"))
+            dec(F.col("ta"))
             * (F.lit(2) * dec(F.col("cb")) + dec(F.col("t")) + F.lit(1))
         ).alias("__r2a"),
         F.sum(
@@ -747,7 +783,7 @@ def ranksum_drift(
     na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
     n = na + nb
     u2 = F.col("__r2a") - dec(F.col("n_a")) * (dec(F.col("n_a")) + F.lit(1))
-    sigma = F.sqrt(
+    sigma2 = (
         na * nb / F.lit(12.0)
         * ((n + F.lit(1.0)) - F.col("__ties").cast("double") / (n * (n - F.lit(1.0))))
     )
@@ -756,10 +792,12 @@ def ranksum_drift(
     # never an ANSI crash. sigma's ties term divides by n(n-1), so it
     # is only evaluated inside the n_a>0 & n_b>0 branch (n >= 2).
     both = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    return out.select(
+    return _per_group(
+        out,
+        group_col,
         "n_a",
         "n_b",
-        u2.cast("long").alias("u2"),
+        *([] if group_col else [u2.cast("long").alias("u2")]),
         F.when(
             both,
             F.round(u2.cast("double") / F.lit(2.0) / (na * nb), 6),
@@ -767,9 +805,10 @@ def ranksum_drift(
         F.when(
             both,
             F.when(
-                sigma > 0,
+                sigma2 > 0,
                 F.round(
-                    (u2.cast("double") - na * nb) / (F.lit(2.0) * sigma), 6
+                    (u2.cast("double") - na * nb) / (F.lit(2.0) * F.sqrt(sigma2)),
+                    6,
                 ),
             ),
         ).alias("z"),
@@ -986,13 +1025,12 @@ def ks_drift(
     CDFs, sensitive to ANY distributional change (location, scale,
     shape) — the classic goodness-of-fit drift test.
 
-    Exact construction (same bounded-domain move as ranksum_drift):
-    values become integer cents, the distinct-cell relation is bounded
-    by the value DOMAIN, and both running CDFs are integer window sums
-    over that relation. The supremum is taken over the EXACT integer
-    cross-difference |cum_a*n_b - cum_b*n_a| in DECIMAL(38,0) (the
-    product passes int64 near n ~ 1e9 per window — the 100 TB
-    regime), so max() is order-free and exact; D is ONE double
+    Exact construction (the domain-bounded :func:`_drift_cells`
+    relation ranksum_drift also ranks over): both running CDFs are
+    integer window sums over the cells. The supremum is taken over the
+    EXACT integer cross-difference |cum_a*n_b - cum_b*n_a| in
+    DECIMAL(38,0) (the product passes int64 near n ~ 1e9 per window —
+    the 100 TB regime), so max() is order-free and exact; D is ONE double
     division of exact integers. The 5%-level critical value
     D_crit = 1.36*sqrt((n_a+n_b)/(n_a*n_b)) (Smirnov asymptotic) is a
     fixed IEEE sequence on exact counts.
@@ -1001,19 +1039,7 @@ def ks_drift(
     """
     from pyspark.sql import Window
 
-    cents = F.floor(
-        F.col(value_col).cast("double") * F.lit(100.0) + F.lit(0.5)
-    ).cast("long")
-    is_a = (F.col(ts_col) < F.lit(cutoff).cast("timestamp")).cast("int")
-    cells = (
-        df.where(F.col(value_col).isNotNull())
-        .select(cents.alias("v"), is_a.alias("a"))
-        .groupBy("v")
-        .agg(
-            F.sum("a").cast("long").alias("ta"),
-            F.sum(F.lit(1) - F.col("a")).cast("long").alias("tb"),
-        )
-    )
+    cells = _drift_cells(df, ts_col, value_col, cutoff)
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = cells.select(
         F.sum("ta").over(w).alias("ca"), F.sum("tb").over(w).alias("cb")
@@ -1277,97 +1303,6 @@ def cohens_d_drift(
     )
 
 
-def grouped_ranksum_drift(
-    df: DataFrame,
-    group_col: str,
-    ts_col: str,
-    value_col: str,
-    cutoff: str,
-) -> DataFrame:
-    """Per-group Mann-Whitney drift scan: the rank-sum AUC and
-    tie-corrected z for EVERY group's early-vs-late value
-    distribution — the triage view over event_value_ranksum_drift's
-    single global test: when the corpus-level number moves, this
-    says WHICH event types carry the shift (and catches
-    offsetting per-type drifts the global test averages away).
-
-    Same exact construction as ranksum_drift, with every window and
-    aggregate partitioned by group: integer-cents cells bound the
-    per-group ordered window by the value DOMAIN, 2*R_a and the tie
-    correction stay in DECIMAL(38,0)/HUGEINT, and auc/z are fixed
-    IEEE sequences on exact integers. Groups with an empty window on
-    either side (or zero variance — all values tied) yield NULL
-    auc/z rather than a 0/0; their counts still report.
-
-    Returns (group, n_a, n_b, auc, z) ordered by group.
-    """
-    from pyspark.sql import Window
-
-    cents = F.floor(
-        F.col(value_col).cast("double") * F.lit(100.0) + F.lit(0.5)
-    ).cast("long")
-    is_a = F.col(ts_col) < F.lit(cutoff).cast("timestamp")
-    cells = (
-        df.where(F.col(value_col).isNotNull())
-        .select(
-            F.col(group_col).alias("g"),
-            cents.alias("v"),
-            is_a.cast("int").alias("a"),
-        )
-        .groupBy("g", "v")
-        .agg(
-            F.count(F.lit(1)).alias("t"),
-            F.sum("a").cast("long").alias("t_a"),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ranked = cells.withColumn(
-        "cb", F.coalesce(F.sum("t").over(w), F.lit(0))
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    out = ranked.groupBy("g").agg(
-        F.sum("t_a").cast("long").alias("n_a"),
-        (F.sum("t") - F.sum("t_a")).cast("long").alias("n_b"),
-        F.sum(
-            dec(F.col("t_a"))
-            * (F.lit(2) * dec(F.col("cb")) + dec(F.col("t")) + F.lit(1))
-        ).alias("__r2a"),
-        F.sum(
-            dec(F.col("t")) * dec(F.col("t")) * dec(F.col("t"))
-            - dec(F.col("t"))
-        ).alias("__ties"),
-    )
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    n = na + nb
-    u2 = F.col("__r2a") - dec(F.col("n_a")) * (dec(F.col("n_a")) + F.lit(1))
-    sigma2 = (
-        na * nb / F.lit(12.0)
-        * (
-            (n + F.lit(1.0))
-            - F.col("__ties").cast("double") / (n * (n - F.lit(1.0)))
-        )
-    )
-    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    return out.select(
-        F.col("g").alias(group_col),
-        "n_a",
-        "n_b",
-        F.when(
-            ok, F.round(u2.cast("double") / F.lit(2.0) / (na * nb), 6)
-        ).alias("auc"),
-        F.when(
-            ok & (sigma2 > 0),
-            F.round(
-                (u2.cast("double") - na * nb)
-                / (F.lit(2.0) * F.sqrt(sigma2)),
-                6,
-            ),
-        ).alias("z"),
-    ).orderBy(group_col)
-
-
 def quantile_shift_profile(
     df: DataFrame,
     ts_col: str,
@@ -1394,19 +1329,7 @@ def quantile_shift_profile(
     """
     from pyspark.sql import Window
 
-    cents = F.floor(
-        F.col(value_col).cast("double") * F.lit(100.0) + F.lit(0.5)
-    ).cast("long")
-    is_a = (F.col(ts_col) < F.lit(cutoff).cast("timestamp")).cast("int")
-    cells = (
-        df.where(F.col(value_col).isNotNull())
-        .select(cents.alias("v"), is_a.alias("a"))
-        .groupBy("v")
-        .agg(
-            F.sum("a").cast("long").alias("ta"),
-            F.sum(F.lit(1) - F.col("a")).cast("long").alias("tb"),
-        )
-    )
+    cells = _drift_cells(df, ts_col, value_col, cutoff)
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = cells.select(
         "v",
@@ -1709,6 +1632,7 @@ def wasserstein_drift(
     ts_col: str,
     value_col: str,
     cutoff: str,
+    group_col: str | None = None,
 ) -> DataFrame:
     """1-D Wasserstein-1 (earth-mover) distance between the value
     distributions before and after ``cutoff`` — the MAGNITUDE member
@@ -1716,141 +1640,56 @@ def wasserstein_drift(
     FAR mass moved (a 1-cent global shift and a 100-dollar shift can
     share a D); W1 = integral |F_a - F_b| dx is exactly the average
     distance mass must travel, in value units — the number a cost
-    model can act on. Same bounded-domain construction as ks_drift:
-    integer cents cells, running CDFs as integer window sums, and the
-    closed-form 1-D transport solution (the CDF-gap integral — no LP
-    needed in one dimension).
+    model can act on. With ``group_col`` it is the magnitude column
+    of the drift TRIAGE scan: ranksum_drift ranks groups by shift
+    significance, this by what the shift COSTS (value units moved per
+    row), which decides remediation priority. Same bounded-domain
+    construction as ks_drift: :func:`_drift_cells`, running CDFs as
+    integer window sums (partitioned by the group, if any — no
+    single-partition stage then), and the closed-form 1-D transport
+    solution (the CDF-gap integral — no LP needed in one dimension).
 
     Exact: each cell's term is the exact integer
     |cum_a*n_b - cum_b*n_a| * (next_v - v) in DECIMAL(38,0) summed in
     DECIMAL (order-free; the cross-product passes int64 near n ~ 1e9);
-    W1 is ONE double division by (n_a * n_b * 100) — the 100 undoes
-    the cents scaling. Cells are bounded by the value DOMAIN, so the
-    single-partition CDF window rides ~50k rows regardless of row
-    count. NULL values drop; a single-class or single-value split
-    yields 0/NULL per the guards.
+    W1 is ONE double division by (n_a * n_b * 100) per group — the 100
+    undoes the cents scaling. Cells are bounded by the value DOMAIN,
+    so the global CDF window rides ~50k rows regardless of row count.
+    A single distinct value gives W1 = 0; a window empty on either
+    side yields NULL.
 
-    Returns ONE row: (n_a, n_b, w1), 6dp double.
+    Global: ONE row (n_a, n_b, w1), 6dp double — all NULL counts on
+    empty input. Grouped: (group, n_a, n_b, w1) ordered by group, no
+    row on empty input.
     """
     from pyspark.sql import Window
 
-    cents = F.floor(
-        F.col(value_col).cast("double") * F.lit(100.0) + F.lit(0.5)
-    ).cast("long")
-    is_a = (F.col(ts_col) < F.lit(cutoff).cast("timestamp")).cast("int")
-    cells = (
-        df.where(F.col(value_col).isNotNull())
-        .select(cents.alias("v"), is_a.alias("a"))
-        .groupBy("v")
-        .agg(
-            F.sum("a").cast("long").alias("ta"),
-            F.sum(F.lit(1) - F.col("a")).cast("long").alias("tb"),
-        )
-    )
-    wcum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    wnext = Window.orderBy("v")
+    g = ["g"] if group_col else []
+    cells = _drift_cells(df, ts_col, value_col, cutoff, group_col)
+    wnext = Window.partitionBy(*g).orderBy("v")
+    wcum = wnext.rowsBetween(Window.unboundedPreceding, 0)
     cum = cells.select(
+        *g,
         "v",
         F.sum("ta").over(wcum).cast("long").alias("ca"),
         F.sum("tb").over(wcum).cast("long").alias("cb"),
         F.lead("v", 1).over(wnext).alias("nxt"),
     )
-    tot = cells.agg(
+    tot = cells.groupBy(*g).agg(
         F.sum("ta").cast("long").alias("n_a"),
         F.sum("tb").cast("long").alias("n_b"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    terms = cum.where(F.col("nxt").isNotNull()).crossJoin(
-        F.broadcast(tot)
-    )
-    s = terms.agg(
-        F.coalesce(
-            F.sum(
-                F.abs(
-                    dec(F.col("ca")) * dec(F.col("n_b"))
-                    - dec(F.col("cb")) * dec(F.col("n_a"))
-                )
-                * dec(F.col("nxt") - F.col("v"))
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("sw")
-    )
-    j = tot.crossJoin(F.broadcast(s))
-    na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    return j.select(
-        "n_a",
-        "n_b",
-        F.when(
-            (F.col("n_a") > 0) & (F.col("n_b") > 0),
-            F.round(
-                F.col("sw").cast("double") / (na * nb * F.lit(100.0)), 6
-            ),
-        ).alias("w1"),
-    )
 
+    def attach(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+        # Global: the right side is one row, so a broadcast cross join.
+        if group_col:
+            return left.join(right, "g", how)
+        return left.crossJoin(F.broadcast(right))
 
-def wasserstein_by_group(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    group_col: str,
-    cutoff: str,
-) -> DataFrame:
-    """Per-group 1-D Wasserstein-1 distance early-vs-late — the
-    magnitude column of the drift TRIAGE scan: grouped_ranksum_drift
-    ranks groups by shift significance; this ranks them by how much
-    the shift COSTS (value units moved per row), which is what
-    decides remediation priority. Same exact construction as
-    :func:`wasserstein_drift`, but every window is PARTITIONED by the
-    group (no single-partition stage at all): cells are
-    (group, cents) bounded by groups x domain, CDFs and the
-    next-value gap are per-group windows, each group's transport sum
-    is an exact DECIMAL(38,0) integer, ONE double division per group.
-    Groups with a single distinct value get W1 = 0; a group empty on
-    either side yields NULL.
-
-    Returns one row per group: (group, n_a, n_b, w1) ordered by
-    group.
-    """
-    from pyspark.sql import Window
-
-    cents = F.floor(
-        F.col(value_col).cast("double") * F.lit(100.0) + F.lit(0.5)
-    ).cast("long")
-    is_a = (F.col(ts_col) < F.lit(cutoff).cast("timestamp")).cast("int")
-    cells = (
-        df.where(F.col(value_col).isNotNull())
-        .select(
-            F.col(group_col).alias("g"), cents.alias("v"), is_a.alias("a")
-        )
-        .groupBy("g", "v")
-        .agg(
-            F.sum("a").cast("long").alias("ta"),
-            F.sum(F.lit(1) - F.col("a")).cast("long").alias("tb"),
-        )
-    )
-    wcum = (
-        Window.partitionBy("g")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wnext = Window.partitionBy("g").orderBy("v")
-    cum = cells.select(
-        "g",
-        "v",
-        F.sum("ta").over(wcum).cast("long").alias("ca"),
-        F.sum("tb").over(wcum).cast("long").alias("cb"),
-        F.lead("v", 1).over(wnext).alias("nxt"),
-    )
-    tot = cells.groupBy("g").agg(
-        F.sum("ta").cast("long").alias("n_a"),
-        F.sum("tb").cast("long").alias("n_b"),
-    )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     per = (
-        cum.where(F.col("nxt").isNotNull())
-        .join(tot, "g")
-        .groupBy("g")
+        attach(cum.where(F.col("nxt").isNotNull()), tot, "inner")
+        .groupBy(*g)
         .agg(
             F.sum(
                 F.abs(
@@ -1861,12 +1700,14 @@ def wasserstein_by_group(
             ).alias("sw")
         )
     )
-    j = tot.join(per, "g", "left").withColumn(
+    # left: a group with a single distinct value has no transport term.
+    j = attach(tot, per, "left").withColumn(
         "sw", F.coalesce("sw", F.lit(0).cast("decimal(38,0)"))
     )
     na, nb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    return j.select(
-        F.col("g").alias(group_col),
+    return _per_group(
+        j,
+        group_col,
         "n_a",
         "n_b",
         F.when(
@@ -1875,7 +1716,7 @@ def wasserstein_by_group(
                 F.col("sw").cast("double") / (na * nb * F.lit(100.0)), 6
             ),
         ).alias("w1"),
-    ).orderBy(group_col)
+    )
 
 
 def ols_multifeature_fit(

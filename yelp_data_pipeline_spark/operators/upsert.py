@@ -11,6 +11,9 @@ anti-join + union), so the engine offers:
 
 - :func:`merge_upsert_df` — the pure-DataFrame semantics (works on any
   source; used by the oracle-checked query registry);
+- :func:`_commit_state` / :func:`_recover_state` — the crash-safe
+  directory swap that the parquet MERGE writers (``pipelines._upsert``,
+  the streaming sinks) replace a table with;
 - :func:`upsert_delta`   — the transactional Delta path
   (``DeltaTable.merge``) when delta-spark is importable, mirroring the
   reference's create-if-absent / merge-else branch (S2G:127-144,
@@ -18,6 +21,9 @@ anti-join + union), so the engine offers:
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +97,144 @@ def merge_upsert_df(target: DataFrame, updates: DataFrame, keys: list[str]) -> D
     """
     untouched = target.join(updates.select(*keys), keys, "left_anti")
     return updates.unionByName(untouched)
+
+
+# The state-swap protocol: replace a parquet directory that the new
+# contents were computed from (a streaming sink's fold state, a gold
+# table's MERGE) so that a crash at any point leaves a recoverable
+# state on disk. Stage, displace the old directory to ``.old-<id>``,
+# rename the staged one into place, then drop the old one; the writer
+# calls :func:`_recover_state` before every write.
+
+
+def _state_orphans(target_path: str) -> list[str]:
+    """``.old-<batch_id>`` directory names next to ``target_path``,
+    sorted by batch id ascending. Names whose suffix is not an integer
+    (a foreign or truncated directory that merely shares the prefix)
+    are not part of the swap protocol and are skipped — recovery runs
+    before every fold, so raising on them would permanently wedge the
+    sink."""
+    parent = os.path.dirname(target_path) or "."
+    base = os.path.basename(target_path)
+    if not os.path.isdir(parent):
+        return []
+    keyed: list[tuple[int, str]] = []
+    for nm in os.listdir(parent):
+        if not nm.startswith(base + ".old-"):
+            continue
+        try:
+            keyed.append((int(nm.rsplit("-", 1)[1]), nm))
+        except ValueError:
+            continue
+    return [nm for _, nm in sorted(keyed)]
+
+
+def _recover_state(target_path: str, ledger: str | None = None) -> None:
+    """Crash-window repair for the state-swap protocol, run by the
+    WRITER before every fold (Structured Streaming executes one
+    foreachBatch at a time per query, and a month's gold MERGE has one
+    writer per table, so the writer owns the directory). Each
+    ``.old-<id>`` orphan identifies which window the crash hit,
+    decided by its batch's ledger marker:
+
+    - marker PRESENT: swap and marker both landed, only the
+      post-marker cleanup was lost — the orphan is garbage, drop it
+      (left in place, it would wedge a later attempt to displace the
+      target under the same name).
+    - marker ABSENT, target present: the swap completed but the
+      marker write was lost — ROLL BACK (drop the post-fold target,
+      restore the pre-fold orphan) so the replayed batch folds
+      exactly once instead of double-counting.
+    - marker ABSENT, target missing: crash between the two renames —
+      restore the orphan so the fold resumes from the last committed
+      state instead of silently resetting the monoid.
+
+    Ledger-less writers (HLL register-max, KMV k-min — idempotent
+    semilattices — and the gold MERGE, whose re-run of a month is
+    idempotent) pass ``ledger=None``: replaying onto post-fold
+    state is a no-op by idempotency, so an orphan beside a live
+    target is simply dropped and a missing target restores from the
+    newest orphan. A stale ``__staging`` dir, in any window, is
+    simply overwritten by the replay's staged write."""
+    parent = os.path.dirname(target_path) or "."
+    pending: list[str] = []
+    for nm in _state_orphans(target_path):
+        path = os.path.join(parent, nm)
+        bid = nm.rsplit("-", 1)[1]
+        committed = (
+            ledger is not None
+            and os.path.exists(os.path.join(ledger, f"batch-{bid}"))
+        ) or (ledger is None and os.path.exists(target_path))
+        if committed:
+            shutil.rmtree(path)
+        else:
+            pending.append(path)
+    if not pending:
+        return
+    # At most one batch can be in flight, so at most one uncommitted
+    # orphan exists; if several somehow do, the newest is the last
+    # committed pre-fold state — keep it, drop the rest.
+    for path in pending[:-1]:
+        shutil.rmtree(path)
+    newest = pending[-1]
+    if os.path.exists(target_path):
+        # Swap landed, marker did not: the target holds an UNRECORDED
+        # fold — roll back to the pre-fold state and let the replay
+        # fold it once. (A crash inside this rollback re-enters one of
+        # the handled windows: no-target ⇒ restore, both ⇒ re-run.)
+        shutil.rmtree(target_path)
+    os.rename(newest, target_path)
+
+
+def _commit_state(
+    df: DataFrame,
+    target_path: str,
+    batch_id: int,
+    marker: str | None = None,
+) -> None:
+    """The shared state-swap protocol: write the new fold to a STAGED
+    directory (never read + overwrite one path in a single job), swap
+    via rename, record the ledger ``marker`` (when the sink's algebra
+    needs one), and only THEN drop the displaced state — the marker
+    must land while the pre-fold state is still on disk, or a crash
+    after the swap would leave an unrecorded fold that a replay
+    double-counts and nothing to roll back to. Every crash window
+    this leaves open is repaired by :func:`_recover_state`."""
+    old = _swap_state_keep_old(df, target_path, batch_id)
+    if marker is not None:
+        with open(marker, "w") as f:
+            f.write("")
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _swap_state_keep_old(
+    df: DataFrame, target_path: str, batch_id: int
+) -> str:
+    """The swap half of the protocol alone: stage, displace, rename —
+    leaving the displaced ``.old-<id>`` state ON DISK and writing no
+    marker, so a MULTI-state sink can swap each of its state paths and
+    land ONE ledger marker after all of them (the curation composite).
+    Until that marker lands, every swap remains rollback-able by
+    :func:`_recover_state`; the caller removes the returned old dir
+    after the marker. Returns the old-state path.
+
+    The staged directory is ``<target>__staging``: one writer owns the
+    target, so one name suffices, and it is the name that the
+    benchmark's tracer (``perfbench/tracing.py``) folds into the
+    table's write time."""
+    staged = f"{target_path}__staging"
+    df.write.mode("overwrite").parquet(staged)
+    old = f"{target_path}.old-{batch_id}"
+    if os.path.exists(old):
+        # A leftover from a crashed attempt of this same batch that
+        # recovery already resolved — garbage; drop it so the
+        # displacement rename below cannot fail on an existing dir.
+        shutil.rmtree(old)
+    if os.path.exists(target_path):
+        os.rename(target_path, old)
+    os.rename(staged, target_path)
+    return old
 
 
 def upsert_delta(

@@ -41,6 +41,78 @@ def with_lag(
     return df.withColumn(alias, F.lag(F.col(col), offset).over(w))
 
 
+def _range_partitioned(
+    df: DataFrame, num_range_parts: int | None, *sort_cols
+) -> DataFrame:
+    """``repartitionByRange`` on ``sort_cols`` (sampled boundaries;
+    ascending partition ids hold ascending key ranges, equal keys
+    co-locate) with the partition id as ``__pid``."""
+    p = int(
+        num_range_parts
+        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    return df.repartitionByRange(p, *sort_cols).withColumn(
+        "__pid", F.spark_partition_id()
+    )
+
+
+def _prefix_offsets(r: DataFrame, weight) -> tuple[DataFrame, int]:
+    """The distributed-rank offset step: ONE bounded driver collect of
+    the per-partition subtotals ``weight`` (≤ one row per range
+    partition — cluster-config bounded, the same legitimacy class as
+    dims.py's deterministic-key path), turned into prefix offsets and
+    broadcast back. ``r`` carries ``__pid``; it is persisted, since
+    the subtotals and the join both read it, and tracked so the
+    session driver releases it after the returned plan materializes.
+    Returns (r with ``__off`` attached, the total weight)."""
+    from ..session import track_persist
+
+    r = track_persist(r)
+    subtotals = dict(r.groupBy("__pid").agg(weight.alias("t")).collect())
+    offsets, acc = [], 0
+    for pid in sorted(subtotals):
+        offsets.append((pid, acc))
+        acc += subtotals[pid]
+    # Explicit schema: an EMPTY offsets list (empty input frame) would
+    # otherwise raise "can not infer schema from empty dataset" — an
+    # empty corpus must yield an empty result, not a crash.
+    off_df = r.sparkSession.createDataFrame(offsets, "__pid int, __off long")
+    return r.join(F.broadcast(off_df), "__pid"), acc
+
+
+def _unique_ranked(
+    df: DataFrame,
+    value_col: str,
+    tiebreak_col: str,
+    num_range_parts: int | None,
+) -> tuple[DataFrame, int]:
+    """df's (value_col, tiebreak_col) with the per-value count
+    ``__cnt``, the global count of smaller values ``__cb`` and the
+    1-based unique rank ``__r`` by (value asc, tiebreak asc), plus the
+    row total N. Steps 1-6 of :func:`scalable_ranks`."""
+    vals = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__cnt"))
+    rv = _range_partitioned(vals, num_range_parts, F.col(value_col).asc())
+    wloc = (
+        Window.partitionBy("__pid")
+        .orderBy(value_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    rv = rv.withColumn("__cum_le", F.sum("__cnt").over(wloc))
+    rv, n_total = _prefix_offsets(rv, F.sum("__cnt"))
+    ranked_vals = rv.select(
+        value_col,
+        "__cnt",
+        (F.col("__off") + F.col("__cum_le") - F.col("__cnt")).alias("__cb"),
+    )
+    wtie = Window.partitionBy(value_col).orderBy(tiebreak_col)
+    out = (
+        df.select(tiebreak_col, value_col)
+        .join(ranked_vals, value_col)
+        .withColumn("__r", F.col("__cb") + F.row_number().over(wtie))
+    )
+    return out, n_total
+
+
 def scalable_ranks(
     df: DataFrame,
     value_col: str,
@@ -62,10 +134,8 @@ def scalable_ranks(
        partition ids hold ascending value ranges;
     3. local cumulative count inside each range partition (a window
        PARTITIONED by partition id — never global);
-    4. one bounded driver collect of per-partition subtotals (one row
-       per range partition — cluster-config bounded, the same
-       legitimacy class as dims.py's deterministic-key path) to turn
-       them into prefix offsets, broadcast back;
+    4. one bounded driver collect of per-partition subtotals turned
+       into prefix offsets, broadcast back (:func:`_prefix_offsets`);
     5. join counts-below to the fact rows on the value (AQE picks
        broadcast when the distinct-value relation is small);
     6. unique rank for ntile = counts-below + row_number inside the
@@ -77,57 +147,7 @@ def scalable_ranks(
     percent_rank = cb/(N-1) and cume_dist = (cb+cnt)/N divide the same
     integers.
     """
-    spark = df.sparkSession
-    p = int(
-        num_range_parts
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-
-    vals = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__cnt"))
-    rv = (
-        vals.repartitionByRange(p, F.col(value_col).asc())
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    wloc = (
-        Window.partitionBy("__pid")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rv = rv.withColumn("__cum_le", F.sum("__cnt").over(wloc))
-    # Two consumers: subtotal agg + the rank join. Tracked so the
-    # session driver releases it after the returned plan materializes.
-    from ..session import track_persist
-
-    rv = track_persist(rv)
-
-    # Bounded collect: ≤ one row per range partition.
-    subtotals = {
-        r["__pid"]: r["t"]
-        for r in rv.groupBy("__pid").agg(F.sum("__cnt").alias("t")).collect()
-    }
-    n_total = sum(subtotals.values())
-    offsets, acc = [], 0
-    for pid in sorted(subtotals):
-        offsets.append((pid, acc))
-        acc += subtotals[pid]
-    # Explicit schema: an EMPTY offsets list (empty input frame) would
-    # otherwise raise "can not infer schema from empty dataset" — an
-    # empty corpus must yield an empty result, not a crash.
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
-
-    ranked_vals = rv.join(F.broadcast(off_df), "__pid").select(
-        value_col,
-        "__cnt",
-        (F.col("__off") + F.col("__cum_le") - F.col("__cnt")).alias("__cb"),
-    )
-
-    wtie = Window.partitionBy(value_col).orderBy(tiebreak_col)
-    out = (
-        df.select(tiebreak_col, value_col)
-        .join(ranked_vals, value_col)
-        .withColumn("__r", F.col("__cb") + F.row_number().over(wtie))
-    )
-
+    out, n_total = _unique_ranked(df, value_col, tiebreak_col, num_range_parts)
     # SQL ntile(n): the first N mod n buckets take floor(N/n)+1 rows.
     q, rem = divmod(n_total, n_tiles)
     if q == 0:
@@ -206,37 +226,14 @@ def global_row_numbers(
     unique id as the last column) — uniqueness makes the global order,
     and therefore every rn, deterministic under any partitioning.
     """
-    from ..session import track_persist
-
-    spark = df.sparkSession
-    p = int(
-        num_range_parts
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
     cols = [F.col(c).asc() for c in order_cols]
-    r = (
-        df.repartitionByRange(p, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
+    r = _range_partitioned(df, num_range_parts, *cols)
     wloc = Window.partitionBy("__pid").orderBy(*cols)
-    r = track_persist(r.withColumn("__lrn", F.row_number().over(wloc)))
-    counts = {
-        row["__pid"]: row["c"]
-        for row in r.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    # Explicit schema: an EMPTY offsets list (empty input frame) would
-    # otherwise raise "can not infer schema from empty dataset" — an
-    # empty corpus must yield an empty result, not a crash.
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
-    return (
-        r.join(F.broadcast(off_df), "__pid")
-        .withColumn(out, (F.col("__off") + F.col("__lrn")).cast("long"))
-        .drop("__pid", "__lrn", "__off")
-    )
+    r = r.withColumn("__lrn", F.row_number().over(wloc))
+    r, _ = _prefix_offsets(r, F.count(F.lit(1)))
+    return r.withColumn(
+        out, (F.col("__off") + F.col("__lrn")).cast("long")
+    ).drop("__pid", "__lrn", "__off")
 
 
 def scalable_unique_ranks(
@@ -265,50 +262,10 @@ def scalable_unique_ranks(
     count aggregate + cross join — which would also sit as an opaque
     nested loop over the persisted input in the executed plan.
     """
-    spark = df.sparkSession
-    p = int(
-        num_range_parts
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    vals = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("__cnt"))
-    rv = (
-        vals.repartitionByRange(p, F.col(value_col).asc())
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    wloc = (
-        Window.partitionBy("__pid")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rv = rv.withColumn("__cum_le", F.sum("__cnt").over(wloc))
-    from ..session import track_persist
-
-    rv = track_persist(rv)
-    subtotals = {
-        r["__pid"]: r["t"]
-        for r in rv.groupBy("__pid").agg(F.sum("__cnt").alias("t")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(subtotals):
-        offsets.append((pid, acc))
-        acc += subtotals[pid]
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
-    ranked_vals = rv.join(F.broadcast(off_df), "__pid").select(
-        value_col,
-        (F.col("__off") + F.col("__cum_le") - F.col("__cnt")).alias("__cb"),
-    )
-    wtie = Window.partitionBy(value_col).orderBy(tiebreak_col)
-    out = (
-        df.select(tiebreak_col, value_col)
-        .join(ranked_vals, value_col)
-        .withColumn(
-            "rn",
-            (F.col("__cb") + F.row_number().over(wtie)).cast("long"),
-        )
-        .drop("__cb")
+    out, n_total = _unique_ranked(df, value_col, tiebreak_col, num_range_parts)
+    out = out.withColumn("rn", F.col("__r").cast("long")).drop(
+        "__cnt", "__cb", "__r"
     )
     if attach_total_col is not None:
-        out = out.withColumn(
-            attach_total_col, F.lit(acc).cast("long")
-        )
+        out = out.withColumn(attach_total_col, F.lit(n_total).cast("long"))
     return out

@@ -49,7 +49,6 @@ predicates, never path arithmetic (the reference's S4 anti-pattern).
 from __future__ import annotations
 
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 from typing import Callable
@@ -61,7 +60,12 @@ from pyspark.sql import functions as F
 from .operators import cleaning as cl
 from .operators import dims, facts, joins
 from .operators.aggregates import group_count
-from .operators.upsert import merge_upsert_df, write_partitioned
+from .operators.upsert import (
+    _commit_state,
+    _recover_state,
+    merge_upsert_df,
+    write_partitioned,
+)
 from .tables import read_json_source
 
 _MONTH_PARTS = ["year", "month"]
@@ -302,23 +306,25 @@ def _upsert(spark: SparkSession, updates: DataFrame, path: str, keys: list[str])
     branch in operators/upsert.py takes over when delta is present).
     Returns the row count of the table as written.
 
-    The rewrite goes through a staging directory + rename: you cannot
-    overwrite a parquet path while a lazy plan still reads it, and a
-    driver-side collect would not scale. (Delta does this swap
-    transactionally; staging+rename is the filesystem stand-in.)
+    The rewrite goes through the state-swap protocol of
+    operators/upsert.py (staged write, displace the old table, rename,
+    drop the old one): you cannot overwrite a parquet path while a
+    lazy plan still reads it, and a driver-side collect would not
+    scale. A crash anywhere in the swap leaves the old or the new
+    table on disk, which the next run's recovery restores; re-running
+    the month then merges the same updates again, a no-op on the new
+    table. (Delta does this swap transactionally.)
 
     The target is read with the schema of ``updates``: the table on disk
     was written by this same plan, so that is its declared schema.
     """
+    _recover_state(path)
     if not os.path.isdir(path):
         return _counted(_write_overwrite, updates, path)
     target = spark.read.schema(updates.schema).parquet(path)
     merged = merge_upsert_df(target, updates, keys)
-    staging = path + "__staging"
-    rows = _counted(_write_overwrite, merged, staging)
-    shutil.rmtree(path)
-    os.rename(staging, path)
-    return rows
+    # One MERGE per table is in flight at a time, so one swap id.
+    return _counted(_commit_state, merged, path, 0)
 
 
 def month_range(

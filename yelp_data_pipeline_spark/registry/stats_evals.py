@@ -17,6 +17,7 @@ from .core import (
     dq,
     graph,
     md5_long_sql,
+    mm,
     sim,
     ts_ops,
     tx,
@@ -734,8 +735,9 @@ FROM agg
     "implementations — all-pairs hamming over dedup.simhash "
     "signatures (a broadcast nested-loop the auditor tags "
     "'sampled-cross': the build side is the md5-residue-filtered "
-    "sample, bounded by construction) and the 7-band LSH of "
-    "dedup.simhash_pairs — and full-outer joins their pair sets. The "
+    "sample, bounded by construction) and the 7-band LSH join of "
+    "multimodal.hamming_neardup_pairs over the same signatures — and "
+    "full-outer joins their pair sets. The "
     "pigeonhole guarantee (≤6 dirty bands at hamming ≤ 6 ⇒ ≥1 clean "
     "band) says recall = precision = 1.0; this query MEASURES it, so "
     "any banding bug (band split across the two hash words, mask "
@@ -777,47 +779,13 @@ def q_simhash_recall_eval(spark, sf_dir):
             F.lit(1).alias("e"),
         )
     )
-    # 7×8-bit banding inlined over the checkpointed signatures — the
-    # single-word specialization of dd.simhash_pairs (its
-    # _simhash_wide(56, 0) is documented bit-identical to dd.simhash,
-    # and band_bits was already pinned to SIMHASH_BAND_BITS here), so
-    # the pair set is unchanged while the banded arm reuses the SAME
-    # computed signatures instead of re-deriving them from text.
-    band_bits = dd.SIMHASH_BAND_BITS
-    mask = F.lit((1 << band_bits) - 1)
-    bands = sigc.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_id"),
-                    F.shiftright("simhash", i * band_bits)
-                    .bitwiseAND(mask)
-                    .alias("band"),
-                )
-                for i in range(dd.SIMHASH_BANDS)
-            ])
-        ).alias("bb"),
-    ).select("doc", "simhash", F.col("bb.band_id"), F.col("bb.band"))
-    x, y = bands.alias("x"), bands.alias("y")
-    bham = F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash")))
-    banded = (
-        x.join(
-            y,
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.doc") < F.col("y.doc")),
-        )
-        .withColumn("hamming", bham)
-        .filter(F.col("hamming") <= 6)
-        .select(
-            F.col("x.doc").alias("doc_a"),
-            F.col("y.doc").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", F.lit(1).alias("l"))
-    )
+    # The banded arm is the 7×8-bit band join of
+    # mm.hamming_neardup_pairs over the SAME checkpointed signatures
+    # (dd.simhash is the 56-bit signature dd.simhash_pairs bands at
+    # this corpus size), so it does not re-derive them from text.
+    banded = mm.hamming_neardup_pairs(
+        sigc, id_col="doc", hash_col="simhash"
+    ).select("doc_a", "doc_b", F.lit(1).alias("l"))
     j = ex.join(banded, ["doc_a", "doc_b"], "full_outer").select(
         F.coalesce("e", F.lit(0)).alias("e"),
         F.coalesce("l", F.lit(0)).alias("l"),
@@ -1838,7 +1806,7 @@ SELECT g AS event_type, n_a, n_b,
 FROM a ORDER BY event_type
 """,
     doc="Per-event-type Mann-Whitney drift scan, early vs late window "
-    "(operators/timeseries.py:grouped_ranksum_drift) — the triage "
+    "(operators/timeseries.py:ranksum_drift with group_col) — the triage "
     "view over event_value_ranksum_drift's single global test: says "
     "WHICH types carry a corpus-level shift and catches offsetting "
     "per-type drifts the global number averages away. Identical "
@@ -1849,9 +1817,9 @@ FROM a ORDER BY event_type
     "ordered window over cells.",
 )
 def q_event_type_ranksum_scan(spark, sf_dir):
-    return ts_ops.grouped_ranksum_drift(
-        _t(spark, sf_dir, "events"), "event_type", "ts", "value",
-        "2024-01-16",
+    return ts_ops.ranksum_drift(
+        _t(spark, sf_dir, "events"), "ts", "value", "2024-01-16",
+        group_col="event_type",
     )
 
 
@@ -3514,8 +3482,8 @@ FROM tot t LEFT JOIN per p ON t.g = p.g
 ORDER BY event_type
 """,
     doc="Per-event-type Wasserstein-1 triage scan "
-    "(operators/timeseries.py:wasserstein_by_group) — the magnitude "
-    "column beside event_type_ranksum_scan: rank-sum ranks types by "
+    "(operators/timeseries.py:wasserstein_drift with group_col) — the "
+    "magnitude column beside event_type_ranksum_scan: rank-sum ranks types by "
     "shift SIGNIFICANCE, W1 by what the shift COSTS (value units "
     "moved per row) — remediation priority. Every window is "
     "PARTITIONED by type (cells bounded by types x cents domain; no "
@@ -3524,8 +3492,8 @@ ORDER BY event_type
 )
 def q_event_type_wasserstein_scan(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    return ts_ops.wasserstein_by_group(
-        ev, "ts", "value", "event_type", "2024-01-16"
+    return ts_ops.wasserstein_drift(
+        ev, "ts", "value", "2024-01-16", group_col="event_type"
     )
 
 

@@ -6,6 +6,7 @@ Split from the single-file queries.py (round 15). Modules are imported by regist
 from __future__ import annotations
 
 from .core import (
+    DataFrame,
     F,
     _q,
     _t,
@@ -1453,17 +1454,10 @@ def q_dedup_threshold_curve(spark, sf_dir):
     )
 
 
-@_q(
-    "dedup_family_agreement",
-    f"""
-WITH lex AS (
-  SELECT doc_a, doc_b FROM ({_minhash_oracle(k=12, bands=4, threshold=0.8)}) m
-),
-sem AS (
-  SELECT id_a AS doc_a, id_b AS doc_b
-  FROM ({_signlsh_adaptive_oracle(threshold=0.42)}) s
-),
-j AS (
+# The agreement row of the two dedup families' pair sets ``lex`` and
+# ``sem`` (doc_a < doc_b on a shared id domain): each family's count,
+# the intersection, each side's exclusive catches, the pair Jaccard.
+_FAMILY_AGREEMENT_SQL = """j AS (
   SELECT CASE WHEN l.doc_a IS NOT NULL THEN 1 ELSE 0 END AS lx,
          CASE WHEN r.doc_a IS NOT NULL THEN 1 ELSE 0 END AS sx
   FROM lex l FULL JOIN sem r
@@ -1479,7 +1473,47 @@ SELECT CAST(sum(lx) AS BIGINT) AS n_lexical,
                        / CAST(count(*) AS DOUBLE), 6)
        END AS pair_jaccard
 FROM j
-""",
+"""
+
+
+def _family_agreement(lex: DataFrame, sem: DataFrame) -> DataFrame:
+    """Spark side of ``_FAMILY_AGREEMENT_SQL``: ONE full outer join of
+    the pair sets (``lx`` / ``sx`` = 1 marks each side), one aggregate."""
+    j = lex.join(sem, ["doc_a", "doc_b"], "full").select(
+        F.coalesce("lx", F.lit(0)).alias("lx"),
+        F.coalesce("sx", F.lit(0)).alias("sx"),
+    )
+    both = F.sum(F.col("lx") * F.col("sx"))
+    return j.agg(
+        F.sum("lx").cast("long").alias("n_lexical"),
+        F.sum("sx").cast("long").alias("n_semantic"),
+        both.cast("long").alias("n_both"),
+        F.sum(F.col("lx") * (1 - F.col("sx")))
+        .cast("long")
+        .alias("n_only_lexical"),
+        F.sum(F.col("sx") * (1 - F.col("lx")))
+        .cast("long")
+        .alias("n_only_semantic"),
+        F.when(
+            F.count(F.lit(1)) > 0,
+            F.round(
+                both.cast("double") / F.count(F.lit(1)).cast("double"), 6
+            ),
+        ).alias("pair_jaccard"),
+    )
+
+
+@_q(
+    "dedup_family_agreement",
+    f"""
+WITH lex AS (
+  SELECT doc_a, doc_b FROM ({_minhash_oracle(k=12, bands=4, threshold=0.8)}) m
+),
+sem AS (
+  SELECT id_a AS doc_a, id_b AS doc_b
+  FROM ({_signlsh_adaptive_oracle(threshold=0.42)}) s
+),
+{_FAMILY_AGREEMENT_SQL}""",
     doc="Lexical-vs-semantic dedup AGREEMENT — the number that decides "
     "whether embedding dedup earns its cost on top of MinHash (the "
     "SemDeDup question asked of real relations): the verified MinHash "
@@ -1506,29 +1540,7 @@ def q_dedup_family_agreement(spark, sf_dir):
         F.col("id_b").alias("doc_b"),
         F.lit(1).alias("sx"),
     )
-    j = lex.join(sem, ["doc_a", "doc_b"], "full").select(
-        F.coalesce("lx", F.lit(0)).alias("lx"),
-        F.coalesce("sx", F.lit(0)).alias("sx"),
-    )
-    return j.agg(
-        F.sum("lx").cast("long").alias("n_lexical"),
-        F.sum("sx").cast("long").alias("n_semantic"),
-        F.sum(F.col("lx") * F.col("sx")).cast("long").alias("n_both"),
-        F.sum(F.col("lx") * (1 - F.col("sx")))
-        .cast("long")
-        .alias("n_only_lexical"),
-        F.sum(F.col("sx") * (1 - F.col("lx")))
-        .cast("long")
-        .alias("n_only_semantic"),
-        F.when(
-            F.count(F.lit(1)) > 0,
-            F.round(
-                F.sum(F.col("lx") * F.col("sx")).cast("double")
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ),
-        ).alias("pair_jaccard"),
-    )
+    return _family_agreement(lex, sem)
 
 
 @_q(
@@ -1581,23 +1593,7 @@ sem AS (
   SELECT id_a AS doc_a, id_b AS doc_b
   FROM ({_signlsh_adaptive_oracle(threshold=0.5, emb_rel="temb")}) s
 ),
-j AS (
-  SELECT CASE WHEN l.doc_a IS NOT NULL THEN 1 ELSE 0 END AS lx,
-         CASE WHEN r.doc_a IS NOT NULL THEN 1 ELSE 0 END AS sx
-  FROM lex l FULL JOIN sem r
-    ON l.doc_a = r.doc_a AND l.doc_b = r.doc_b
-)
-SELECT CAST(sum(lx) AS BIGINT) AS n_lexical,
-       CAST(sum(sx) AS BIGINT) AS n_semantic,
-       CAST(sum(lx * sx) AS BIGINT) AS n_both,
-       CAST(sum(lx * (1 - sx)) AS BIGINT) AS n_only_lexical,
-       CAST(sum(sx * (1 - lx)) AS BIGINT) AS n_only_semantic,
-       CASE WHEN count(*) = 0 THEN NULL
-            ELSE round(CAST(sum(lx * sx) AS DOUBLE)
-                       / CAST(count(*) AS DOUBLE), 6)
-       END AS pair_jaccard
-FROM j
-""",
+{_FAMILY_AGREEMENT_SQL}""",
     doc="dedup_family_agreement asked on NON-DEGENERATE truth "
     "(verdict r12 item #2): the lexical arm is unchanged (verified "
     "MinHash, exact Jaccard >= 0.8) but the semantic arm runs the "
@@ -1634,29 +1630,7 @@ def q_dedup_family_agreement_text(spark, sf_dir):
         F.col("id_b").alias("doc_b"),
         F.lit(1).alias("sx"),
     )
-    j = lex.join(sem, ["doc_a", "doc_b"], "full").select(
-        F.coalesce("lx", F.lit(0)).alias("lx"),
-        F.coalesce("sx", F.lit(0)).alias("sx"),
-    )
-    return j.agg(
-        F.sum("lx").cast("long").alias("n_lexical"),
-        F.sum("sx").cast("long").alias("n_semantic"),
-        F.sum(F.col("lx") * F.col("sx")).cast("long").alias("n_both"),
-        F.sum(F.col("lx") * (1 - F.col("sx")))
-        .cast("long")
-        .alias("n_only_lexical"),
-        F.sum(F.col("sx") * (1 - F.col("lx")))
-        .cast("long")
-        .alias("n_only_semantic"),
-        F.when(
-            F.count(F.lit(1)) > 0,
-            F.round(
-                F.sum(F.col("lx") * F.col("sx")).cast("double")
-                / F.count(F.lit(1)).cast("double"),
-                6,
-            ),
-        ).alias("pair_jaccard"),
-    )
+    return _family_agreement(lex, sem)
 
 
 @_q(
