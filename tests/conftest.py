@@ -58,9 +58,11 @@ def jobs_during(spark, fn):
 
 @contextlib.contextmanager
 def cc_path(spark, path):
-    """Run ``graph.connected_components`` on ``path`` inside the block:
-    "driver" leaves the session as it is, "distributed" sets the
-    broadcast threshold to -1, which turns the driver path off."""
+    """Run every graph operator (connected components, k-core, BFS,
+    both PageRanks, HITS) on ``path`` inside the block: "driver" leaves
+    the session as it is, so graphs under the broadcast threshold
+    finish on the driver; "distributed" sets the threshold to -1, which
+    turns every driver path off."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     if path == "distributed":

@@ -1,12 +1,16 @@
-"""Connected components, deterministic sampling, and the new text ops
-(TF-IDF / PII scrub / inverted index / curation composite)."""
+"""Graph operators on both of their paths, deterministic sampling, and
+the text ops (TF-IDF / PII scrub / inverted index / curation
+composite)."""
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import cc_path
+from conftest import SF_DIR, cc_path, jobs_during
 from yelp_data_pipeline_spark.operators import graph, sampling as smp
 from yelp_data_pipeline_spark.operators import textops as tx
+from yelp_data_pipeline_spark.session import release_tracked
 
 
 def _cc(spark, edges):
@@ -176,26 +180,34 @@ def test_star_cc_rejects_nonpositive_max_iter(spark):
 
 
 @pytest.mark.parametrize(
-    "edges",
+    "edges, ddl",
     [
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)],
-        [(i, i + 1) for i in range(100, 159)],
-        [(1, 2), (2, 1), (1, 2), (3, 2), (7, 8), (8, 7)],
-        [(1, 2), (2, 2), (5, 5), (3, 3), (3, 4), (None, 6)],
-        [],
+        ([(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)],
+         "doc_a long, doc_b long"),
+        ([(i, i + 1) for i in range(100, 159)], "doc_a long, doc_b long"),
+        ([(1, 2), (2, 1), (1, 2), (3, 2), (7, 8), (8, 7)], "doc_a long, doc_b long"),
+        ([(1, 2), (2, 2), (5, 5), (3, 3), (3, 4), (None, 6)], "doc_a long, doc_b long"),
+        ([], "doc_a long, doc_b long"),
+        # NaN is one node and -0.0 is 0.0 in Spark; float ids stay on
+        # the distributed path (union-find on the driver never returned
+        # on a NaN endpoint).
+        ([(1.0, math.nan), (math.nan, 4.0), (-0.0, 2.0), (0.0, 3.0)],
+         "doc_a double, doc_b double"),
     ],
-    ids=["mixed", "chain60", "dup_reversed", "self_loop_null", "empty"],
+    ids=["mixed", "chain60", "dup_reversed", "self_loop_null", "empty",
+         "double_nan_negzero"],
 )
-def test_cc_paths_agree(spark, edges):
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+def test_cc_paths_agree(spark, edges, ddl):
+    df = spark.createDataFrame(edges, ddl)
     out = {}
     for path in ("driver", "distributed"):
         with cc_path(spark, path):
             got = graph.connected_components(df, "doc_a", "doc_b")
-        out[path] = (got.schema, sorted(got.collect()))
+        out[path] = (got.schema, sorted(map(repr, got.collect())))
     assert out["driver"] == out["distributed"]
+    id_type = df.schema[0].dataType.simpleString()
     assert [(f.dataType.simpleString(), f.nullable) for f in out["driver"][0]] == [
-        ("bigint", True), ("bigint", True)]
+        (id_type, True), (id_type, True)]
 
 
 def test_mixture_resampling_hits_target_proportions(spark):
@@ -364,3 +376,202 @@ def test_priority_sample_unbiased_total_and_small_table(spark):
     # HT estimator: unbiased; for this size the realized estimate
     # lands within ~25% of truth (deterministic given the hash).
     assert abs(est_total - true_total) / true_total < 0.25
+
+
+# chain 1-2-3-4-5 (multi-round propagation), star 10-(11,12,13),
+# pair 20-21.
+MIXED_GRAPH = [(1, 2), (2, 3), (3, 4), (4, 5),
+               (10, 11), (10, 12), (10, 13), (20, 21)]
+
+
+class TestConnectedComponentsLazyCheckpoint:
+    def test_labels_exact_and_checkpoint_rooted(self, spark):
+        edges = spark.createDataFrame(MIXED_GRAPH, "a long, b long")
+        want = {n: 1 for n in (1, 2, 3, 4, 5)}
+        want.update({n: 10 for n in (10, 11, 12, 13)})
+        want.update({20: 20, 21: 20})
+        for path in ("driver", "distributed"):
+            with cc_path(spark, path):
+                labels = graph.connected_components(edges, "a", "b")
+            got = {r["node"]: r["cluster"] for r in labels.collect()}
+            assert got == want, path
+            # The returned relation reads collected rows or the label
+            # checkpoint, not a re-derivation of the input's lineage.
+            plan = labels._jdf.queryExecution().analyzed().toString()
+            assert "Join" not in plan and "Exchange" not in plan, path
+
+    def test_non_convergence_still_raises(self, spark):
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, 12)], "a long, b long"
+        )
+        with cc_path(spark, "distributed"), pytest.raises(
+            RuntimeError, match="did not converge"
+        ):
+            graph.connected_components(edges, "a", "b", max_iter=2)
+
+
+def _pagerank(df, scale=10**12):
+    edges = df.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    return graph.pagerank_integer(edges, iters=3, scale=scale)
+
+
+def _ppr(df, scale=10**12):
+    edges = df.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    seeds = edges.select(F.col("src").alias("node")).where(F.col("node").isNotNull())
+    return graph.pagerank_personalized(edges, seeds, iters=3, scale=scale)
+
+
+# Each graph operator on an (a, b) edge relation; the second argument
+# is True on the overflow case, whose ranks/authorities leave long.
+GRAPH_OPS = {
+    "cc": lambda df, big: graph.connected_components(df, "a", "b"),
+    "kcore": lambda df, big: graph.kcore_peel(df, k=2, rounds=8, src="a", dst="b"),
+    "bfs": lambda df, big: graph.bfs_hops(df, "a", "b", rounds=8),
+    "pagerank": lambda df, big: _pagerank(df, 2**62 if big else 10**12),
+    "ppr": lambda df, big: _ppr(df, 2**62 if big else 10**12),
+    "hits": lambda df, big: graph.hits_bipartite(df, "a", "b", rounds=16 if big else 2),
+}
+
+GRAPH_CASES = {
+    "mixed": (MIXED_GRAPH, "a long, b long"),
+    # 30-node chain: k-core (k=2) peels one node off each end per round
+    # and BFS reaches 8 hops of 28, so both stop on the round bound.
+    "chain": ([(i, i + 1) for i in range(100, 129)], "a long, b long"),
+    "dup_reversed": ([(1, 2), (2, 1), (1, 2), (3, 2), (3, 1), (7, 8), (8, 7)], "a long, b long"),
+    "self_loop_null": (
+        [(1, 2), (2, 2), (5, 5), (3, 3), (3, 4), (None, 6), (1, None), (2, 3), (3, 1)],
+        "a long, b long",
+    ),
+    "empty": ([], "a long, b long"),
+    "string_ids": (
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "b"), ("x", "y")],
+        "a string, b string",
+    ),
+    "double_nan_negzero": (
+        [(1.0, math.nan), (math.nan, 4.0), (-0.0, 2.0), (0.0, 3.0), (2.0, 3.0), (3.0, 1.0)],
+        "a double, b double",
+    ),
+    # K(4,4): 85 * rank overflows at scale 2**62; authority 4**32 > 2**63.
+    "overflow": ([(l, r) for l in range(1, 5) for r in range(11, 15)], "a long, b long"),
+}
+
+
+def _on_driver(case, op):
+    """Whether the default session finishes ``op`` on ``case`` on the
+    driver: float ids and out-of-range values keep it distributed (HITS
+    casts its ids to long first)."""
+    if case == "double_nan_negzero":
+        return op == "hits"
+    return not (case == "overflow" and op in ("pagerank", "ppr", "hits"))
+
+
+@pytest.mark.parametrize(
+    "op, case",
+    [
+        pytest.param(op, case, id=f"{op}-{case}")
+        for op in GRAPH_OPS
+        for case in GRAPH_CASES
+        if case != "overflow" or op in ("pagerank", "ppr", "hits")
+    ],
+)
+def test_graph_paths_agree(spark, op, case):
+    rows, ddl = GRAPH_CASES[case]
+    df = spark.createDataFrame(rows, ddl)
+    out = {}
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            got = GRAPH_OPS[op](df, case == "overflow")
+            root = got._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            collected = got.collect()
+        assert (root == "LocalRelation") == (path == "driver" and _on_driver(case, op))
+        if op == "bfs":
+            assert [r["hop"] for r in collected] == sorted(r["hop"] for r in collected)
+        out[path] = (
+            [(f.name, f.dataType.simpleString(), f.nullable) for f in got.schema],
+            sorted(map(repr, collected)),
+        )
+    assert out["driver"] == out["distributed"]
+
+
+@pytest.mark.parametrize("op", ["pagerank", "ppr", "hits"])
+def test_graph_overflow_raises_under_ansi(spark, op):
+    # A value past long hands over to the distributed path, so ANSI
+    # raises there as Spark defines it instead of the driver loop
+    # returning an exact Python int.
+    df = spark.createDataFrame(*GRAPH_CASES["overflow"])
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for path in ("driver", "distributed"):
+            with cc_path(spark, path), pytest.raises(Exception, match="OVERFLOW"):
+                GRAPH_OPS[op](df, True).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_graph_round_bounds_rejected(spark, path):
+    df = spark.createDataFrame(MIXED_GRAPH, "a long, b long")
+    with cc_path(spark, path):
+        for op in (
+            lambda: graph.connected_components(df, "a", "b", max_iter=0),
+            lambda: graph.kcore_peel(df, k=2, rounds=0, src="a", dst="b"),
+            lambda: graph.bfs_hops(df, "a", "b", rounds=0),
+        ):
+            with pytest.raises(ValueError, match="must be >= 1"):
+                op()
+
+
+# Spark jobs each operator submits while building its result on
+# MIXED_GRAPH (local[4], 4 shuffle partitions). On the driver path
+# that is the one bounded edge collect (and the seed collect of
+# personalized PageRank). On the forced distributed path, under AQE a
+# round's one action runs each shuffle stage as its own job, so these
+# are not round counts; they pin the per-round plans and the
+# one-action-per-round discipline, and that the size rule submits no
+# job when the threshold is -1 (the counts equal those of the loops
+# before the rule existed, run at -1). An extra action per round, or a
+# lost checkpoint, moves them.
+@pytest.mark.parametrize(
+    "op, path, jobs",
+    [
+        ("cc", "driver", 1),
+        ("cc", "distributed", 38),
+        ("kcore", "distributed", 17),
+        ("bfs", "distributed", 15),
+        ("kcore", "driver", 1),
+        ("bfs", "driver", 1),
+        ("pagerank", "driver", 1),
+        ("ppr", "driver", 2),
+        ("hits", "driver", 1),
+    ],
+    ids=["driver_cc", "star_cc", "kcore", "bfs", "driver_kcore", "driver_bfs",
+         "driver_pagerank", "driver_ppr", "driver_hits"],
+)
+def test_fixpoint_build_job_count(spark, op, path, jobs):
+    edges = spark.createDataFrame(MIXED_GRAPH, "a long, b long")
+    run = {
+        "cc": lambda: graph.connected_components(edges, "a", "b"),
+        "kcore": lambda: graph.kcore_peel(edges, k=1, src="a", dst="b"),
+        "bfs": lambda: graph.bfs_hops(edges, "a", "b"),
+    }.get(op, lambda: GRAPH_OPS[op](edges, False))
+    # k-core's edge list persists via track_persist: a cached copy from
+    # an earlier call would skip its build jobs.
+    release_tracked()
+    with cc_path(spark, path):
+        _, n = jobs_during(spark, run)
+    assert n == jobs
+
+
+def test_supplier_kcore_build_jobs(spark):
+    # The registry's k-core over the supplier k-NN graph, built warm
+    # (the first build also reads parquet footers): the one bounded
+    # collect of the edge build, whose shuffle stages AQE runs as jobs
+    # of their own; no peel-round jobs (the round loop cost 20).
+    from yelp_data_pipeline_spark.queries import queries
+
+    build = queries()["supplier_kcore"]
+    build(spark, SF_DIR)
+    release_tracked()
+    _, n = jobs_during(spark, lambda: build(spark, SF_DIR))
+    assert n == 5

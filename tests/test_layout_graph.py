@@ -6,7 +6,9 @@ forced false positives."""
 import hashlib
 
 import pyspark.sql.functions as F
+import pytest
 
+from conftest import cc_path
 from yelp_data_pipeline_spark.operators.graph import pagerank_integer
 from yelp_data_pipeline_spark.operators.joins import bloom_prefilter_semi_join
 from yelp_data_pipeline_spark.operators.textops import bpe_pair_counts
@@ -84,11 +86,13 @@ def test_pagerank_integer_matches_python_replay(spark):
             c[d] += r[s] // outdeg[s]
         r = {v: teleport_mass // n + (damping * c[v]) // 100 for v in nodes}
 
-    got = {
-        row["node"]: row["rank_scaled"]
-        for row in pagerank_integer(edges, iters=iters, scale=scale).collect()
-    }
-    assert got == r
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            got = {
+                row["node"]: row["rank_scaled"]
+                for row in pagerank_integer(edges, iters=iters, scale=scale).collect()
+            }
+        assert got == r, path
     # Ranks are meaningful: the hub 'y' (3 in-edges) outranks sources.
     assert got["y"] > got["b"]
 
@@ -282,24 +286,25 @@ def test_personalized_pagerank_matches_python_replay(spark):
             + (damping * c[v]) // 100
             for v in nodes
         }
-    got = {
-        row["node"]: row["rank_scaled"]
-        for row in pagerank_personalized(
-            edges, seeds, iters=iters, scale=scale
-        ).collect()
-    }
-    assert got == r
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            got = {
+                row["node"]: row["rank_scaled"]
+                for row in pagerank_personalized(
+                    edges, seeds, iters=iters, scale=scale
+                ).collect()
+            }
+        assert got == r, path
     # Personalization: a's neighborhood (x, y) outranks c, which only
     # global centrality would reward.
     assert got["x"] > got["c"] and got["y"] > got["c"]
 
 
 def test_personalized_pagerank_raises_on_disjoint_seeds(spark):
-    import pytest
-
     from yelp_data_pipeline_spark.operators.graph import pagerank_personalized
 
     edges = spark.createDataFrame([("a", "b")], ["src", "dst"])
     ghosts = spark.createDataFrame([("zz",)], ["node"])
-    with pytest.raises(ValueError, match="no seed intersects"):
-        pagerank_personalized(edges, ghosts)
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path), pytest.raises(ValueError, match="no seed intersects"):
+            pagerank_personalized(edges, ghosts)

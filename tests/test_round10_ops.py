@@ -4,7 +4,17 @@ analytics, token-budget allocation."""
 
 import pyspark.sql.functions as F
 
+from conftest import cc_path
 from yelp_data_pipeline_spark.operators import graph, timeseries as ts
+
+
+def _hits_both_paths(spark, e, **kw):
+    """hits_bipartite's rows on the driver path, then the distributed one."""
+    out = []
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            out.append(graph.hits_bipartite(e, "p", "s", **kw).collect())
+    return out
 
 
 class TestHitsBipartite:
@@ -18,17 +28,17 @@ class TestHitsBipartite:
         e = spark.createDataFrame(
             [(1, 10), (2, 10), (2, 20), (3, 20)], ["p", "s"]
         )
-        rows = graph.hits_bipartite(e, "p", "s", rounds=2, top_k=10).collect()
-        got = {r["node"]: (r["degree"], r["authority"], r["rank"]) for r in rows}
-        assert got == {10: (2, 9, 1), 20: (2, 9, 2)}  # tie -> node asc
+        for rows in _hits_both_paths(spark, e, rounds=2, top_k=10):
+            got = {r["node"]: (r["degree"], r["authority"], r["rank"]) for r in rows}
+            assert got == {10: (2, 9, 1), 20: (2, 9, 2)}  # tie -> node asc
 
     def test_duplicate_edges_ignored(self, spark):
         e = spark.createDataFrame(
             [(1, 10), (1, 10), (1, 10), (2, 20)], ["p", "s"]
         )
-        rows = graph.hits_bipartite(e, "p", "s", rounds=1).collect()
-        # dedup -> both suppliers symmetric: a1 = deg(l) = 1 each
-        assert {(r["node"], r["authority"]) for r in rows} == {(10, 1), (20, 1)}
+        for rows in _hits_both_paths(spark, e, rounds=1):
+            # dedup -> both suppliers symmetric: a1 = deg(l) = 1 each
+            assert {(r["node"], r["authority"]) for r in rows} == {(10, 1), (20, 1)}
 
     def test_authority_prefers_hub_connected(self, spark):
         # s1 touches the 3-degree hub part; s2 touches three 1-degree parts.
@@ -38,11 +48,12 @@ class TestHitsBipartite:
             [(1, 10), (1, 20), (1, 30), (2, 40), (3, 40), (4, 40)],
             ["p", "s"],
         )
-        rows = graph.hits_bipartite(e, "p", "s", rounds=2, top_k=10).collect()
-        by_node = {r["node"]: r["authority"] for r in rows}
+        driver, distributed = _hits_both_paths(spark, e, rounds=2, top_k=10)
+        assert driver == distributed
+        by_node = {r["node"]: r["authority"] for r in driver}
         # all exact ints, rank deterministic
         assert all(isinstance(v, int) for v in by_node.values())
-        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+        assert [r["rank"] for r in driver] == list(range(1, len(driver) + 1))
 
 
 class TestOlsMultifeature:

@@ -11,11 +11,6 @@ claims so a later refactor cannot silently break them:
 - `cosine_neardup_pairs(use_pandas_projection=True)` claims exact sign
   bits on INTEGER-valued vectors (the hashed-text-embedding rows wired
   in registry/warehouse_b.py rely on this).
-- `connected_components` finishes small graphs on the driver and runs
-  the distributed fixpoint ONE action per round via a lazy
-  localCheckpoint; labels must stay exact and the returned relation
-  must not carry the input's lineage on either path. Its two paths,
-  k-core and BFS have their build-time Spark job counts pinned.
 - `_top_pc_state` mirrors Spark SQL's NULL / NaN / div-by-zero
   semantics in its driver-side power iteration (advisor r17 items).
 - `ensure_min_parallelism` probes (not skips) LogicalRDD-rooted plans.
@@ -24,13 +19,11 @@ claims so a later refactor cannot silently break them:
 import math
 import struct
 
-import pytest
 from pyspark.sql import functions as F
 
-from conftest import cc_path, jobs_during
 from yelp_data_pipeline_spark.functions.vectors import dot
-from yelp_data_pipeline_spark.operators import graph, similarity as sim
-from yelp_data_pipeline_spark.session import ensure_min_parallelism, release_tracked
+from yelp_data_pipeline_spark.operators import similarity as sim
+from yelp_data_pipeline_spark.session import ensure_min_parallelism
 
 # Exact-round-trip stress values: negative zero, subnormal, huge,
 # repeating binary fractions, and shortest-repr corner cases.
@@ -148,69 +141,6 @@ class TestPandasProjectionExactOnIntegerVectors:
         )
         assert expr_pairs == arrow_pairs
         assert len(expr_pairs) >= 40  # the planted dups were found
-
-
-# chain 1-2-3-4-5 (multi-round propagation), star 10-(11,12,13),
-# pair 20-21.
-MIXED_GRAPH = [(1, 2), (2, 3), (3, 4), (4, 5),
-               (10, 11), (10, 12), (10, 13), (20, 21)]
-
-
-class TestConnectedComponentsLazyCheckpoint:
-    def test_labels_exact_and_checkpoint_rooted(self, spark):
-        edges = spark.createDataFrame(MIXED_GRAPH, "a long, b long")
-        want = {n: 1 for n in (1, 2, 3, 4, 5)}
-        want.update({n: 10 for n in (10, 11, 12, 13)})
-        want.update({20: 20, 21: 20})
-        for path in ("driver", "distributed"):
-            with cc_path(spark, path):
-                labels = graph.connected_components(edges, "a", "b")
-            got = {r["node"]: r["cluster"] for r in labels.collect()}
-            assert got == want, path
-            # The returned relation reads collected rows or the label
-            # checkpoint, not a re-derivation of the input's lineage.
-            plan = labels._jdf.queryExecution().analyzed().toString()
-            assert "Join" not in plan and "Exchange" not in plan, path
-
-    def test_non_convergence_still_raises(self, spark):
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 12)], "a long, b long"
-        )
-        with cc_path(spark, "distributed"), pytest.raises(
-            RuntimeError, match="did not converge"
-        ):
-            graph.connected_components(edges, "a", "b", max_iter=2)
-
-
-def _distributed_cc(df):
-    with cc_path(df.sparkSession, "distributed"):
-        return graph.connected_components(df, "a", "b")
-
-
-# Spark jobs each converge-tested loop submits while building its
-# result on MIXED_GRAPH (local[4], 4 shuffle partitions). Under AQE a
-# round's one action runs each shuffle stage as its own job, so these
-# are not round counts; they pin the per-round plans and the
-# one-action-per-round discipline. An extra action per round, or a
-# lost checkpoint, moves them. The driver path of connected_components
-# runs its prelude's count and one collect.
-@pytest.mark.parametrize(
-    "op, jobs",
-    [
-        (lambda df: graph.connected_components(df, "a", "b"), 5),
-        (_distributed_cc, 38),
-        (lambda df: graph.kcore_peel(df, k=1, src="a", dst="b"), 16),
-        (lambda df: graph.bfs_hops(df, "a", "b"), 16),
-    ],
-    ids=["driver_cc", "star_cc", "kcore", "bfs"],
-)
-def test_fixpoint_build_job_count(spark, op, jobs):
-    edges = spark.createDataFrame(MIXED_GRAPH, "a long, b long")
-    # k-core's edge list persists via track_persist: a cached copy from
-    # an earlier call would skip its build jobs.
-    release_tracked()
-    _, n = jobs_during(spark, lambda: op(edges))
-    assert n == jobs
 
 
 class TestTopPcDegenerateInputs:

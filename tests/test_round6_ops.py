@@ -9,6 +9,7 @@ from itertools import combinations
 
 import pyspark.sql.functions as F
 
+from conftest import cc_path
 from yelp_data_pipeline_spark.operators.aggregates import cms_heavy_hitters
 from yelp_data_pipeline_spark.operators.graph import triangle_counts
 from yelp_data_pipeline_spark.operators.quality import column_profile
@@ -303,12 +304,14 @@ def test_kcore_peel_cascades(spark):
     edges = [(a, b) for a in (1, 2, 3, 4) for b in (1, 2, 3, 4) if a < b]
     edges += [(4, 5), (5, 6)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {(r["node"], r["core_deg"]) for r in kcore_peel(df, k=2).collect()}
-    assert got == {(1, 3), (2, 3), (3, 3), (4, 3)}
-    # One-shot degree filter would have kept node 5 (initial degree 2).
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            got = {(r["node"], r["core_deg"]) for r in kcore_peel(df, k=2).collect()}
+            assert got == {(1, 3), (2, 3), (3, 3), (4, 3)}, path
+            # One-shot degree filter would have kept node 5 (initial degree 2).
 
-    # k above the max degree empties the graph.
-    assert kcore_peel(df, k=5).count() == 0
+            # k above the max degree empties the graph.
+            assert kcore_peel(df, k=5).count() == 0, path
 
 
 def test_kcore_peel_round_limit_is_anytime(spark):
@@ -320,10 +323,12 @@ def test_kcore_peel_round_limit_is_anytime(spark):
     c = 10
     edges = [(i, i + 1) for i in range(1, c)] + [(c, 1 + c), (c, 2 + c), (1 + c, 2 + c)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got2 = {r["node"] for r in kcore_peel(df, k=2, rounds=2).collect()}
-    assert got2 == set(range(3, c + 3))
-    full = {r["node"] for r in kcore_peel(df, k=2, rounds=25).collect()}
-    assert full == {c, c + 1, c + 2}
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            got2 = {r["node"] for r in kcore_peel(df, k=2, rounds=2).collect()}
+            assert got2 == set(range(3, c + 3)), path
+            full = {r["node"] for r in kcore_peel(df, k=2, rounds=25).collect()}
+            assert full == {c, c + 1, c + 2}, path
 
 
 def test_mad_outliers_flags_tail_and_guards_degenerate(spark):

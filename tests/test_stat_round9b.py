@@ -8,6 +8,7 @@ import math
 import pyspark.sql.functions as F
 import pytest
 
+from conftest import cc_path
 from yelp_data_pipeline_spark.operators import aggregates as agg
 from yelp_data_pipeline_spark.operators import dedup as dd
 from yelp_data_pipeline_spark.operators import quality as dq
@@ -801,12 +802,14 @@ def test_bfs_hops_path_and_disconnected(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "a long, b long"
     )
-    out = {r["hop"]: r["n_nodes"] for r in gr.bfs_hops(edges).collect()}
-    assert out == {-1: 2, 0: 1, 1: 2, 2: 1, 3: 1}
-    # Fully connected triangle: no -1 row.
     tri = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "a long, b long")
-    out = {r["hop"]: r["n_nodes"] for r in gr.bfs_hops(tri).collect()}
-    assert out == {0: 1, 1: 2}
+    for path in ("driver", "distributed"):
+        with cc_path(spark, path):
+            out = {r["hop"]: r["n_nodes"] for r in gr.bfs_hops(edges).collect()}
+            assert out == {-1: 2, 0: 1, 1: 2, 2: 1, 3: 1}, path
+            # Fully connected triangle: no -1 row.
+            out = {r["hop"]: r["n_nodes"] for r in gr.bfs_hops(tri).collect()}
+            assert out == {0: 1, 1: 2}, path
 
 
 def test_prefix_dim_fidelity_structure_and_zero_suffix(spark):

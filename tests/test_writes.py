@@ -2,6 +2,8 @@
 partition overwrite, schema evolution, MERGE semantics — the round-1
 "implemented but never executed" gap."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -76,6 +78,27 @@ def test_write_partitioned_leaves_session_conf_untouched(spark, tmp_path):
             assert spark.conf.get(key) == session_mode
     finally:
         spark.conf.set(key, before)
+
+
+def test_commit_state_stages_at_target_staging(spark, tmp_path, monkeypatch):
+    """The staged directory's name is a contract: the benchmark's
+    tracer (perfbench/tracing.py) folds a write under
+    ``<table>__staging`` into that table's write time, so a rename here
+    would silently zero the gold tables' write metrics."""
+    target = str(tmp_path / "dim_business")
+    renames = []
+    rename = os.rename
+
+    def spy(src, dst):
+        renames.append((src, dst))
+        rename(src, dst)
+
+    monkeypatch.setattr(up.os, "rename", spy)
+    for batch in (0, 1):  # a first write, then one that displaces it
+        up._commit_state(_frame(spark, [(batch, "a", 2020, 1)]), target, batch)
+        assert renames[-1] == (f"{target}__staging", target)
+    assert os.listdir(tmp_path) == ["dim_business"]
+    assert [r["id"] for r in spark.read.parquet(target).collect()] == [1]
 
 
 def test_schema_evolving_overwrite(spark, tmp_path):

@@ -5,7 +5,11 @@ given SF dir, then compares row count, sorted column names, and an
 order-insensitive value hash (floats canonicalized via repr of the
 exact double). Usage:
 
-    python tools/check_oracle.py [sf_dir] [query ...]
+    python tools/check_oracle.py [sf_dir] [query ...] [--conf key=value ...]
+
+Each ``--conf`` sets one Spark conf on the session, e.g.
+``--conf spark.sql.autoBroadcastJoinThreshold=-1`` runs every graph
+operator on its distributed path.
 """
 
 from __future__ import annotations
@@ -44,10 +48,25 @@ def _hash_rows(cols, rows) -> str:
     return h.hexdigest()
 
 
+def _pop_conf(argv: list[str]) -> dict[str, str]:
+    """Remove every ``--conf key=value`` pair from ``argv`` in place and
+    return them as a dict, so the rest keeps the positional usage."""
+    conf = {}
+    while "--conf" in argv:
+        i = argv.index("--conf")
+        key, sep, value = (argv[i + 1] if i + 1 < len(argv) else "").partition("=")
+        if not sep or not key:
+            sys.exit("--conf expects key=value")
+        conf[key] = value
+        del argv[i:i + 2]
+    return conf
+
+
 def main() -> int:
+    conf = _pop_conf(sys.argv)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = get_spark("check_oracle")
+    spark = get_spark("check_oracle", extra_conf=conf)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -11,29 +11,43 @@ SF="${1:-/root/testdata/sf0.01}"
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 
-echo "== 1/8 oracle type audit (pandas-safe final projections) =="
+echo "== 1/9 oracle type audit (pandas-safe final projections) =="
 python tools/audit_oracle_types.py
 
-echo "== 2/8 full registry sweep vs DuckDB, ANSI ON, at $SF =="
+echo "== 2/9 full registry sweep vs DuckDB, ANSI ON, at $SF =="
 SPARK_GRAFT_ANSI=true python tools/check_oracle.py "$SF"
 
-echo "== 3/8 plan audit (default sweep: cartesian/NLJ classification) =="
+# The graph operators finish small graphs on the driver, so the sweep
+# above never reaches their distributed paths; a broadcast threshold of
+# -1 turns the driver paths off.
+GRAPH_QUERIES="dedup_clusters semantic_dedup_survivors dedup_clusters_star
+  customer_golden_records dedup_cluster_rand_index semantic_dedup_survivors_text
+  split_leakage_audit cluster_size_histogram leakage_safe_splits
+  dedup_composition_shift pretraining_data_report supplier_kcore
+  supplier_bfs_hops pagerank_supplier_graph personalized_pagerank_nation
+  part_supplier_hits"
+echo "== 3/9 graph consumers on their distributed paths (threshold -1), ANSI ON, at $SF =="
+# shellcheck disable=SC2086
+SPARK_GRAFT_ANSI=true python tools/check_oracle.py "$SF" $GRAPH_QUERIES \
+  --conf spark.sql.autoBroadcastJoinThreshold=-1
+
+echo "== 4/9 plan audit (default sweep: cartesian/NLJ classification) =="
 python tools/audit_plans.py
 
-echo "== 4/8 pytest =="
+echo "== 5/9 pytest =="
 python -m pytest tests/ -x -q
 
-echo "== 5/8 degenerate-input gate (empty / one-row / ties sweeps) =="
+echo "== 6/9 degenerate-input gate (empty / one-row / ties sweeps) =="
 python tools/check_degenerate.py
 
-echo "== 6/8 partition-layout determinism sweep (local[5], 7 shuffle partitions) =="
+echo "== 7/9 partition-layout determinism sweep (local[5], 7 shuffle partitions) =="
 SPARK_GRAFT_CPUS=5 SPARK_SHUFFLE_PARTITIONS=7 SPARK_GRAFT_ANSI=true \
   python tools/check_oracle.py /root/testdata/sf0.001
 
-echo "== 7/8 perfbench self-tests =="
+echo "== 8/9 perfbench self-tests =="
 python3 -m pytest perfbench -q
 
-echo "== 8/8 bench (one JSON line) =="
+echo "== 9/9 bench (one JSON line) =="
 python bench.py
 
 echo "ALL VERIFICATION STAGES GREEN"

@@ -7,34 +7,101 @@ if A~B and B~C, then {A,B,C} is one group and one survivor should be
 kept. ``connected_components`` turns a pair list into (node, cluster)
 labels; ``dedup_survivors`` picks min-id survivors per cluster.
 
-Scale posture: ``connected_components`` counts the deduplicated edges
-once and picks its algorithm from that count. Near-dup graphs are
-hundreds to tens of thousands of edges; when the edge list fits under
-the session's broadcast threshold, union-find on the driver finishes
-in one collect. Larger graphs run the large-star/small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14), which halves the diameter per round. The converge-tested
-loops here (star CC, k-core, BFS) share one round discipline,
-``_fixpoint``: a lazy localCheckpoint per round keeps plans flat and
-one count per round both materializes it and tests convergence.
+Scale posture: one size rule for every iterative graph operator
+(``connected_components``, ``kcore_peel``, ``bfs_hops``, both
+PageRanks and ``hits_bipartite``). ``_small_graph`` collects the edge
+columns once, through Arrow, when they fit under the session's
+``spark.sql.autoBroadcastJoinThreshold`` — the size Spark would ship
+to every executor for a broadcast join. The operator then runs its own
+loop in Python and returns a local relation with the distributed
+path's schema: on graphs of hundreds to hundreds of thousands of edges
+the cost of a Spark round loop is per-job coordination, not data (the
+Dremel argument, VLDB'20). A threshold of ``-1``, float or double ids,
+or an edge list over the threshold keep the distributed path, which is
+unchanged: large-star/small-star CC (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14) halves the diameter per
+round, and the converge-tested loops (star CC, k-core, BFS) share one
+round discipline, ``_fixpoint``: a lazy localCheckpoint per round keeps
+plans flat and one count per round both materializes it and tests
+convergence.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
+
+_LONG_MAX = 2**63 - 1
+
+
+def _at_least_one(n: int, arg: str) -> None:
+    if n < 1:
+        raise ValueError(f"{arg} must be >= 1, got {n}")
+
+
+def _small_graph(
+    edges: DataFrame, *cols: str | Column
+) -> tuple[list[tuple], StructType] | None:
+    """``(rows, schema)`` of ``edges.select(*cols)`` when the graph is
+    small enough to finish on the driver, else ``None``.
+
+    Small means at most ``cap = threshold // (8 + row default size)``
+    rows, Spark's own row-size estimate against the session's
+    ``spark.sql.autoBroadcastJoinThreshold``. One bounded
+    ``limit(cap + 1)`` collect through Arrow decides it and fetches the
+    rows in the same job; the Arrow columns decode to exact Python
+    values. ``None`` without any job when the threshold is ``-1`` (as
+    it turns broadcast off), when the columns differ in type, or when
+    they are float or double: Python orders and hashes NaN and -0.0
+    unlike Spark, which groups NaN with NaN and folds -0.0 into 0.0.
+    """
+    proj = edges.select(*cols)
+    threshold = proj.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    types = {f.dataType for f in proj.schema}
+    if threshold < 0 or len(types) != 1 or isinstance(types.pop(), (FloatType, DoubleType)):
+        return None
+    cap = threshold // (8 + proj._jdf.schema().defaultSize())
+    table = proj.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    return list(zip(*(c.to_pylist() for c in table.columns))), proj.schema
+
+
+def _id_field(schema: StructType, name: str) -> StructField:
+    """The node column a distributed path builds from the endpoint
+    columns of ``schema``: their type, nullable if either one is."""
+    return StructField(name, schema[0].dataType, any(f.nullable for f in schema))
+
+
+def _local(edges: DataFrame, rows: list[tuple], schema: StructType) -> DataFrame:
+    """``rows`` as a relation with ``schema``, built as an Arrow table:
+    Spark turns it into a LocalRelation that the JVM scans directly. A
+    list of tuples, or an empty pandas frame, would become a Python RDD
+    that starts Python workers on every scan; a pandas frame would also
+    turn a long column with NULLs into float64."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return edges.sparkSession.createDataFrame(table, schema)
 
 
 def _fixpoint(
     step: Callable[[DataFrame | None], DataFrame],
     count: Callable[[DataFrame, DataFrame | None], int],
     max_rounds: int,
-    arg: str = "max_iter",
     first: DataFrame | None = None,
     stop: Callable[[int, int | None], bool] = lambda n, prev_n: n == 0,
 ) -> tuple[DataFrame, int, int]:
@@ -47,9 +114,9 @@ def _fixpoint(
     truncated when the job completes) and its result ``n`` answers
     convergence. The loop stops after the first round where
     ``stop(n, previous round's n)`` holds (default: ``n == 0``) or after
-    ``max_rounds`` rounds; ``last`` and ``n`` are the final round's
-    relation and count, so ``stop`` failing on them means the bound was
-    hit.
+    ``max_rounds`` rounds (callers check it is >= 1 before any work);
+    ``last`` and ``n`` are the final round's relation and count, so
+    ``stop`` failing on them means the bound was hit.
 
     Why this shape: without the cut, each round's logical plan nests
     the previous one (hash-min CC measured 9.5 MB plan strings / 798
@@ -68,8 +135,6 @@ def _fixpoint(
     and power-iteration loops elsewhere are not lineage-cut Spark
     fixpoints.
     """
-    if max_rounds < 1:
-        raise ValueError(f"{arg} must be >= 1, got {max_rounds}")
     prev, prev_n = first, None
     for rounds in range(1, max_rounds + 1):
         rel = step(prev).localCheckpoint(eager=False)
@@ -94,27 +159,27 @@ def connected_components(
     callers left-join the labels and coalesce a missing node to its own
     id. Both columns have the input's id type.
 
-    The edges are deduplicated, persisted and counted once; the count
-    picks the algorithm, so no caller guesses the graph's diameter:
+    No caller guesses the graph's diameter; the size rule
+    (``_small_graph``) picks the algorithm:
 
-    - If ``count × row width`` fits under the session's
-      ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark would
-      ship to every executor for a broadcast join), the edges are
-      collected and union-find with the smaller id as root finishes on
-      the driver. On dedup graphs (hundreds to tens of thousands of
-      edges) that replaces dozens of small Spark jobs with one collect.
-      A threshold of ``-1`` disables this path, as it disables
-      broadcast.
-    - Otherwise the alternating large-star/small-star algorithm
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC'14) runs through ``_fixpoint`` in O(log d) rounds. Per
-      round (plain joins/aggregates, edge-keyed shuffles) large-star
-      links every node's LARGER neighbors to m = min(neighborhood ∪
-      {u}), then small-star links its smaller-or-equal neighbors (and
-      itself) to their min. The fixpoint is reached when the edge set
-      stops changing, leaving depth-1 stars centered at component
-      minima; the test is ONE full-outer-join count (a row with either
-      side NULL ⇒ the edge sets differ).
+    - If the edge list fits under the session's
+      ``spark.sql.autoBroadcastJoinThreshold``, the one bounded collect
+      feeds union-find with the smaller id as root on the driver. On
+      dedup graphs (hundreds to tens of thousands of edges) that
+      replaces dozens of small Spark jobs with one collect.
+    - Otherwise (also for a threshold of ``-1`` and for float or double
+      ids, where NaN and -0.0 group as Spark defines) the edges are
+      deduplicated, persisted and counted once, and the alternating
+      large-star/small-star algorithm (Kiveris et al., "Connected
+      Components in MapReduce and Beyond", SoCC'14) runs through
+      ``_fixpoint`` in O(log d) rounds. Per round (plain
+      joins/aggregates, edge-keyed shuffles) large-star links every
+      node's LARGER neighbors to m = min(neighborhood ∪ {u}), then
+      small-star links its smaller-or-equal neighbors (and itself) to
+      their min. The fixpoint is reached when the edge set stops
+      changing, leaving depth-1 stars centered at component minima;
+      the test is ONE full-outer-join count (a row with either side
+      NULL ⇒ the edge sets differ).
 
     Either way the returned relation carries none of the input's
     lineage: a local relation, or an eager checkpoint of the label map.
@@ -123,8 +188,16 @@ def connected_components(
     the distributed path spends ``max_iter`` rounds without reaching
     the fixpoint.
     """
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    _at_least_one(max_iter, "max_iter")
+    small = _small_graph(edges, F.col(src).alias("u"), F.col(dst).alias("v"))
+    if small is not None:
+        rows, schema = small
+        node = _id_field(schema, "node")
+        labels = _union_find(
+            (u, v) for u, v in rows if u is not None and v is not None and u != v
+        )
+        cluster = StructField("cluster", node.dataType, node.nullable)
+        return _local(edges, labels, StructType([node, cluster]))
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -132,21 +205,8 @@ def connected_components(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        n_edges = e.count()
-        spark = e.sparkSession
-        threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-        # Spark's own row-size estimate: 8 bytes of row overhead plus
-        # each column's default size.
-        row_bytes = 8 + e._jdf.schema().defaultSize()
+        e.count()  # dedup once; the first star round scans the cache
         all_nodes = e.select(F.col("u").alias("node")).union(e.select("v")).distinct()
-        if n_edges * row_bytes <= threshold:
-            node = all_nodes.schema["node"]
-            schema = StructType([node, StructField("cluster", node.dataType, node.nullable)])
-            # A pandas frame goes through Arrow into a LocalRelation that
-            # the JVM scans directly; a list of tuples would become a
-            # Python RDD that starts Python workers on every scan.
-            labels = pd.DataFrame(_union_find(e.collect()), columns=["node", "cluster"])
-            return spark.createDataFrame(labels, schema)
         return _star_labels(e, all_nodes, max_iter)
     finally:
         e.unpersist()
@@ -457,43 +517,20 @@ def pagerank_integer(
     Overflow: ranks sum to ≤ scale, so damping_pct * C_t ≤ 85·10^12,
     comfortably inside int64.
 
+    An edge list under the broadcast threshold (``_small_graph``) runs
+    the same integer steps on the driver in Python ints; a value that
+    leaves the ``long`` range there hands the graph to the distributed
+    path, so overflow behaves as Spark defines it (an error under ANSI,
+    wrap-around without it). A threshold of ``-1`` and float or double
+    ids run the distributed loop directly.
+
     edges: (src: string, dst: string), pre-deduplicated.
     Returns (node: string, rank_scaled: long).
     """
-    from ..session import track_persist
-
-    teleport_mass = (100 - damping_pct) * scale // 100
-    # Loop invariants persist ONCE: without this, every iteration's plan
-    # re-executes the edge build (and its dedup shuffle) from source —
-    # measured 59 exchanges for 3 rounds vs 12 with reuse. On a real
-    # cluster, additionally repartition edges by src so the per-round
-    # ranks join reuses the exchange.
-    edges = track_persist(edges)
-    # deg joins by src every round; computing it pre-attached to edges
-    # would denormalize — keep it a slim (src, outdeg) relation instead.
-    deg = track_persist(edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
-    nodes = track_persist(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # Global PageRank IS the personalized variant with S = V: delegate
-    # to the shared loop (is_seed ≡ 1, ns = |V|) so the per-round
-    # join/aggregate/lineage discipline exists once. |V| arrives as
-    # ONE driver scalar — the same one-count-per-run budget CC and
-    # k-core spend per ROUND.
-    n = nodes.count()
-    if n == 0:
-        # Empty graph: no nodes, no ranks — an empty relation, not a
-        # crash (an upstream filter that drops every edge must not
-        # kill the stage; scale // 0 would).
-        return nodes.select(
-            "node", F.lit(None).cast("long").alias("rank_scaled")
-        )
-    flagged = nodes.withColumn("is_seed", F.lit(1))
-    return _pagerank_loop(
-        edges, deg, flagged, n, iters, scale, damping_pct, teleport_mass
-    )
+    # Global PageRank IS the personalized variant with S = V: the
+    # shared loop runs it with is_seed ≡ 1, ns = |V|, so the per-round
+    # join/aggregate/lineage discipline exists once.
+    return _pagerank_loop(edges, None, iters, scale, damping_pct)
 
 
 def kcore_peel(
@@ -517,18 +554,42 @@ def kcore_peel(
     distributed count per round, the only driver scalar); extra
     oracle rounds past convergence change nothing.
 
-    Scale posture: per round ONE semi-join of the symmetrized edge
-    list against the survivor set (edge-keyed shuffle) + ONE
-    groupBy(node) degree count with map-side partials; each round's
-    survivors are lazily checkpointed and materialized by the
-    convergence count (``_fixpoint``). Edges symmetrize + dedup once up
-    front and stay persisted across rounds.
+    Scale posture: an edge list under the broadcast threshold
+    (``_small_graph``) peels on the driver (same rounds, same early
+    exit) and returns a local relation. Otherwise (also at a threshold
+    of ``-1`` or for float or double ids), per round ONE semi-join of the symmetrized edge list
+    against the survivor set (edge-keyed shuffle) + ONE groupBy(node)
+    degree count with map-side partials; each round's survivors are
+    lazily checkpointed and materialized by the convergence count
+    (``_fixpoint``). Edges symmetrize + dedup once up front and stay
+    persisted across rounds. Either way self-loops and edges with a
+    NULL endpoint are dropped.
 
     Returns (node, core_deg): surviving nodes with their within-core
-    degree after ``rounds`` rounds.
+    degree after ``rounds`` rounds. Raises ``ValueError`` if ``k < 1``
+    or ``rounds < 1``.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    _at_least_one(k, "k")
+    _at_least_one(rounds, "rounds")
+    small = _small_graph(edges, F.col(src).alias("u"), F.col(dst).alias("v"))
+    if small is not None:
+        rows, schema = small
+        adj: dict = {}
+        for u, v in rows:
+            if u is not None and v is not None and u != v:
+                adj.setdefault(u, set()).add(v)
+                adj.setdefault(v, set()).add(u)
+        alive, prev_n = adj, None
+        for _ in range(rounds):
+            deg = {u: sum(v in alive for v in adj[u]) for u in alive}
+            core = {u: d for u, d in deg.items() if d >= k}
+            if len(core) == prev_n:
+                break
+            alive, prev_n = core, len(core)
+        out = StructType(
+            [_id_field(schema, "node"), StructField("core_deg", LongType(), False)]
+        )
+        return _local(edges, list(core.items()), out)
     from ..session import track_persist
 
     sym = track_persist(
@@ -569,7 +630,6 @@ def kcore_peel(
         peel,
         lambda rel, _: rel.count(),
         rounds,
-        arg="rounds",
         stop=lambda n, prev_n: n == prev_n,
     )
     return survivors.select(F.col("u").alias("node"), "core_deg")
@@ -706,65 +766,78 @@ def pagerank_personalized(
     relation once and persists across rounds; lineage cut per round.
 
     seeds: DataFrame with a ``node`` column. Returns
-    (node, rank_scaled).
+    (node, rank_scaled). Raises ``ValueError`` when no seed is a node
+    of a non-empty graph. Small graphs and seed sets finish on the
+    driver as in ``pagerank_integer``.
     """
-    from ..session import track_persist
+    return _pagerank_loop(edges, seeds, iters, scale, damping_pct)
 
-    teleport_mass = (100 - damping_pct) * scale // 100
-    edges = track_persist(edges)
-    deg = track_persist(
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    )
-    nodes = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst").alias("node"))
-    ).distinct()
-    flagged = track_persist(
-        nodes.join(
-            seeds.select("node").distinct().withColumn("__seed", F.lit(1)),
-            "node",
-            "left",
-        ).select("node", F.coalesce("__seed", F.lit(0)).alias("is_seed"))
-    )
-    # ONE driver scalar (same budget as CC's convergence counts): |S∩V|
-    # must be validated — with zero surviving seeds every teleport
-    # branch is dead and the loop would SILENTLY return all-zero ranks
-    # (a typo'd seed prefix reads as "nothing is related"). The scalar
-    # also replaces the broadcast-stat cross join with a literal.
-    ns, nn = flagged.agg(
-        F.sum("is_seed"), F.count(F.lit(1))
-    ).first()
-    if nn == 0:
-        # Empty graph: an empty rank relation, not a crash — distinct
-        # from the typo'd-seed case below, which only makes sense when
-        # there ARE nodes the seeds could have hit.
-        return flagged.select(
-            "node", F.lit(None).cast("long").alias("rank_scaled")
-        )
-    if not ns:
-        raise ValueError(
-            "pagerank_personalized: no seed intersects the graph's node "
-            "set — ranks would be uniformly zero. Check the seed ids."
-        )
-    return _pagerank_loop(
-        edges, deg, flagged, int(ns), iters, scale, damping_pct, teleport_mass
-    )
+
+_NO_SEED = (
+    "pagerank_personalized: no seed intersects the graph's node set — "
+    "ranks would be uniformly zero. Check the seed ids."
+)
 
 
 def _pagerank_loop(
     edges: DataFrame,
-    deg: DataFrame,
-    flagged: DataFrame,
-    ns: int,
+    seeds: DataFrame | None,
     iters: int,
     scale: int,
     damping_pct: int,
-    teleport_mass: int,
 ) -> DataFrame:
-    """Shared integer-PageRank iteration: ``flagged`` = (node,
-    is_seed) with ``ns`` seed rows; global PageRank is the special
-    case is_seed ≡ 1, ns = |V| (pagerank_integer delegates here), so
-    the join/aggregate/lineage discipline cannot drift between the
-    global and personalized variants."""
+    """Shared integer-PageRank iteration: ``seeds`` ``None`` is global
+    PageRank (is_seed ≡ 1, ns = |V|), so the join/aggregate/lineage
+    discipline cannot drift between the global and personalized
+    variants. Duplicate edges count in ``outdeg`` and in the
+    contributions; NULL ids are nodes that never pass or receive
+    mass."""
+    local = _pagerank_on_driver(edges, seeds, iters, scale, damping_pct)
+    if local is not None:
+        return local
+    from ..session import track_persist
+
+    teleport_mass = (100 - damping_pct) * scale // 100
+    # Loop invariants persist ONCE: without this, every iteration's plan
+    # re-executes the edge build (and its dedup shuffle) from source —
+    # measured 59 exchanges for 3 rounds vs 12 with reuse. On a real
+    # cluster, additionally repartition edges by src so the per-round
+    # ranks join reuses the exchange.
+    edges = track_persist(edges)
+    # deg joins by src every round; computing it pre-attached to edges
+    # would denormalize — keep it a slim (src, outdeg) relation instead.
+    deg = track_persist(edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
+    nodes = edges.select(F.col("src").alias("node")).union(
+        edges.select(F.col("dst").alias("node"))
+    ).distinct()
+    # ONE driver scalar per run (the budget CC and k-core spend per
+    # ROUND), then a literal in the integer expressions: |V| for global
+    # PageRank; |S∩V| for the personalized one, where it must be
+    # validated — with zero surviving seeds every teleport branch is
+    # dead and the loop would SILENTLY return all-zero ranks (a typo'd
+    # seed prefix reads as "nothing is related").
+    if seeds is None:
+        nodes = track_persist(nodes)
+        ns = nn = nodes.count()
+        flagged = nodes.withColumn("is_seed", F.lit(1))
+    else:
+        flagged = track_persist(
+            nodes.join(
+                seeds.select("node").distinct().withColumn("__seed", F.lit(1)),
+                "node",
+                "left",
+            ).select("node", F.coalesce("__seed", F.lit(0)).alias("is_seed"))
+        )
+        ns, nn = flagged.agg(F.sum("is_seed"), F.count(F.lit(1))).first()
+    if nn == 0:
+        # Empty graph: an empty rank relation, not a crash (an upstream
+        # filter that drops every edge must not kill the stage; scale //
+        # 0 would) — distinct from the typo'd-seed case below, which
+        # only makes sense when there ARE nodes the seeds could have hit.
+        return flagged.select("node", F.lit(None).cast("long").alias("rank_scaled"))
+    if not ns:
+        raise ValueError(_NO_SEED)
+    ns = int(ns)
     ranks = flagged.select(
         "node",
         F.when(
@@ -792,6 +865,73 @@ def _pagerank_loop(
         )
         ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", F.col("r").alias("rank_scaled"))
+
+
+def _pagerank_on_driver(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    iters: int,
+    scale: int,
+    damping_pct: int,
+) -> DataFrame | None:
+    """``_pagerank_loop`` on the driver, or ``None`` to hand over.
+
+    It hands over when ``_small_graph`` does (for the edges or the
+    seeds), when the seed ids' type is not the edges', when
+    ``iters < 1``, when the parameters could make a rank negative (Python
+    ``//`` floors where Spark's ``div`` truncates) or when any value
+    leaves the ``long`` range. Otherwise every rank is the exact value
+    Spark computes."""
+    if not (
+        iters >= 1
+        and type(scale) is int and 0 <= scale <= _LONG_MAX
+        and type(damping_pct) is int and 0 <= damping_pct <= 100
+    ):
+        return None
+    small = _small_graph(edges, "src", "dst")
+    if small is None:
+        return None
+    rows, schema = small
+    out_schema = StructType(
+        [_id_field(schema, "node"), StructField("rank_scaled", LongType(), True)]
+    )
+    nodes = {x for edge in rows for x in edge}
+    if not nodes:
+        return _local(edges, [], out_schema)
+    if seeds is None:
+        seedset = nodes
+    else:
+        got = _small_graph(seeds, "node")
+        if got is None or got[1][0].dataType != schema[0].dataType:
+            return None
+        # A NULL id never joins, so it is a node but never a seed.
+        seedset = nodes.intersection(s for (s,) in got[0] if s is not None)
+        if not seedset:
+            raise ValueError(_NO_SEED)
+    ns = len(seedset)
+    teleport = (100 - damping_pct) * scale // 100 // ns
+    out: dict = {}
+    for src, dst in rows:
+        if src is not None:  # a NULL src never joins its rank
+            out.setdefault(src, []).append(dst)
+    r = {v: scale // ns if v in seedset else 0 for v in nodes}
+    for _ in range(iters):
+        c: dict = {}
+        for src, dsts in out.items():
+            share = r[src] // len(dsts)
+            for dst in dsts:
+                c[dst] = c.get(dst, 0) + share
+        # Spark sums the NULL dst group too, then never joins it.
+        if max(c.values(), default=0) * max(damping_pct, 1) > _LONG_MAX:
+            return None
+        c.pop(None, None)
+        r = {
+            v: (teleport if v in seedset else 0) + damping_pct * c.get(v, 0) // 100
+            for v in nodes
+        }
+        if max(r.values()) > _LONG_MAX:
+            return None
+    return _local(edges, list(r.items()), out_schema)
 
 
 def global_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -863,20 +1003,34 @@ def bfs_hops(
     component is covered"), the number that decides how many rounds
     iterative algorithms on this graph actually need.
 
-    Level-synchronous frontier expansion, the canonical distributed
-    BFS: each round is one key-shuffled join frontier->edges plus an
-    anti-join against the settled set, so a node enters `dist` at its
-    FIRST (minimal) hop — no min() reduction needed. `rounds` bounds
-    the unrolled plan (the k-core/pagerank anytime contract: fixed
-    rounds, exact integers, deterministic regardless of scheduling);
-    nodes not reached within `rounds` report as hop -1. Each round's
-    frontier is lazily checkpointed and its count (the emptiness probe)
-    materializes it (``_fixpoint``), so lineage stays linear (the
-    plan-fan-in lesson from the unigram-LM DP).
+    An edge list under the broadcast threshold (``_small_graph``) runs
+    the same levels on the driver and returns a local relation.
+    Otherwise (also at a threshold of ``-1`` or for float or double
+    ids): level-synchronous
+    frontier expansion, the canonical distributed BFS: each round is
+    one key-shuffled join frontier->edges plus an anti-join against the
+    settled set, so a node enters `dist` at its FIRST (minimal) hop —
+    no min() reduction needed. Each round's frontier is lazily
+    checkpointed and its count (the emptiness probe) materializes it
+    (``_fixpoint``), so lineage stays linear (the plan-fan-in lesson
+    from the unigram-LM DP). `rounds` bounds the levels on both paths
+    (the k-core/pagerank anytime contract: fixed rounds, exact
+    integers, deterministic regardless of scheduling); nodes not
+    reached within `rounds` report as hop -1. Self-loops count toward
+    degree; a NULL endpoint is a node that joins nothing, so it is only
+    ever reached from a neighbor or reported unreached, as Spark's
+    joins treat NULL keys.
 
     Returns (hop, n_nodes) ordered by hop; the -1 row only when
-    unreached nodes exist.
+    unreached nodes exist. Raises ``ValueError`` if ``rounds < 1``.
     """
+    _at_least_one(rounds, "rounds")
+    schema = StructType(
+        [StructField("hop", IntegerType(), False), StructField("n_nodes", LongType(), False)]
+    )
+    small = _small_graph(edges, F.col(src).alias("u"), F.col(dst).alias("v"))
+    if small is not None:
+        return _local(edges, _bfs_levels(small[0], rounds), schema)
     half = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # Materialize the symmetric edge list ONCE: every round joins
     # against it, and without this the (potentially expensive)
@@ -916,7 +1070,7 @@ def bfs_hops(
         )
 
     last, n_new, _ = _fixpoint(
-        expand, lambda rel, _: rel.count(), rounds, arg="rounds", first=seed
+        expand, lambda rel, _: rel.count(), rounds, first=seed
     )
     if n_new:  # round-limited: the last, non-empty frontier is a level too
         levels.append(last)
@@ -935,6 +1089,31 @@ def bfs_hops(
         .select(F.lit(-1).cast("int").alias("hop"), "n_nodes")
     )
     return hist.unionByName(unreach).orderBy("hop")
+
+
+def _bfs_levels(rows: list[tuple], rounds: int) -> list[tuple[int, int]]:
+    """``bfs_hops``'s (hop, n_nodes) rows on the driver, with Spark's
+    NULL rules: a NULL id is a node and a degree group, sorts first
+    among equal degrees, never joins as a key, and so passes every
+    anti-join (it is never settled, and always counts as unreached)."""
+    adj: dict = {}
+    for u, v in rows:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    if not adj:
+        return []
+    seed = min(adj, key=lambda u: (-len(adj[u]), u is not None, u))
+    levels, settled = [[seed]], {seed}
+    for _ in range(rounds):
+        reached = {v for x in levels[-1] if x is not None for v in adj[x]}
+        frontier = [v for v in reached if v is None or v not in settled]
+        if not frontier:
+            break
+        levels.append(frontier)
+        settled.update(frontier)
+    unreached = sum(u is None or u not in settled for u in adj)
+    hist = [(hop, len(level)) for hop, level in enumerate(levels)]
+    return ([(-1, unreached)] if unreached else []) + hist
 
 
 def hits_bipartite(
@@ -969,18 +1148,34 @@ def hits_bipartite(
     is part of the operator's definition — the oracle replays the same
     unrolled recurrence, so any engine agrees bit-for-bit.
 
-    Scale: the deduped edge list is persisted and reused by all
+    Scale: an edge list under the broadcast threshold
+    (``_small_graph``; ids are cast to long first, so float ids qualify)
+    runs the recurrence on the driver in Python ints and returns a
+    local relation; if an authority leaves the ``long`` range there,
+    the distributed path runs instead, so the cast fails or turns NULL
+    as Spark defines it. Otherwise (also at a threshold of ``-1``) the
+    deduped edge list is persisted and reused by all
     2·rounds joins; each half-round is one key-partitioned
     shuffle-join + one combinable groupBy (map-side partials), never a
     global sort. The final top-k is a TakeOrdered (per-partition heap
     + driver merge of k rows), and the rank window runs on the ≤k-row
-    result, not the graph.
+    result, not the graph. Both paths drop duplicate edges and edges
+    with a NULL endpoint.
     """
+    lr = (F.col(left_col).cast("long").alias("l"), F.col(right_col).cast("long").alias("r"))
+    small = _small_graph(edges, *lr)
+    if small is not None:
+        top = _hits_top(small[0], rounds, top_k)
+        if top is not None:
+            schema = StructType([
+                StructField("node", LongType(), small[1]["r"].nullable),
+                StructField("degree", LongType(), False),
+                StructField("authority", LongType(), True),
+                StructField("rank", IntegerType(), False),
+            ])
+            return _local(edges, top, schema)
     e = (
-        edges.select(
-            F.col(left_col).cast("long").alias("l"),
-            F.col(right_col).cast("long").alias("r"),
-        )
+        edges.select(*lr)
         .where(F.col("l").isNotNull() & F.col("r").isNotNull())
         .distinct()
     )
@@ -1010,3 +1205,27 @@ def hits_bipartite(
     return top.withColumn(
         "rank", F.row_number().over(w).cast("int")
     ).orderBy("rank")
+
+
+def _hits_top(rows: list[tuple], rounds: int, top_k: int) -> list[tuple] | None:
+    """``hits_bipartite``'s (node, degree, authority, rank) rows on the
+    driver, or ``None`` when an authority leaves the ``long`` range.
+    Every earlier score is at most some final authority (each h(l) is
+    a term of a(r) for each r adjacent to l), so the final check covers
+    the rounds too."""
+    e = {(l, r) for l, r in rows if l is not None and r is not None}
+    a = {r: 1 for _, r in e}
+    for _ in range(rounds):
+        h: dict = {}
+        for l, r in e:
+            h[l] = h.get(l, 0) + a[r]
+        a = {}
+        for l, r in e:
+            a[r] = a.get(r, 0) + h[l]
+    if max(a.values(), default=0) > _LONG_MAX:
+        return None
+    deg: dict = {}
+    for _, r in e:
+        deg[r] = deg.get(r, 0) + 1
+    top = sorted(a.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
+    return [(r, deg[r], s, rank) for rank, (r, s) in enumerate(top, 1)]

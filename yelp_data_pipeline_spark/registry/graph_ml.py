@@ -64,10 +64,13 @@ FROM top ORDER BY rank
     "authority mass. Unnormalized EXACT-INTEGER recurrence (L2 "
     "normalization only rescales the ranking, so it is dropped; "
     "DECIMAL(38,0) accumulation, BIGINT projection) — the oracle "
-    "replays the same unrolled recurrence. Each half-round is one "
+    "replays the same unrolled recurrence. An edge list under the "
+    "broadcast threshold runs the recurrence on the driver after one "
+    "bounded collect; an authority past the long range or a "
+    "threshold of -1 keep the distributed plan: each half-round one "
     "key-partitioned join + combinable groupBy on the persisted edge "
-    "list; the top-k is a TakeOrdered, and the rank window runs on "
-    "10 rows, never the graph.",
+    "list, the top-k a TakeOrdered, and the rank window on 10 rows, "
+    "never the graph.",
 )
 def q_part_supplier_hits(spark, sf_dir):
     return graph.hits_bipartite(

@@ -3532,11 +3532,13 @@ ORDER BY hop
     "traversal primitive beside PageRank/k-core/triangles: the hop "
     "profile is the empirical reach/diameter read that tells you how "
     "many rounds iterative algorithms on this graph need. Level-"
-    "synchronous frontier expansion (one keyed join + settled-set "
-    "anti-join per round, lazy per-round checkpoints materialized by "
-    "the emptiness count), fixed 8-round anytime "
-    "contract, hop -1 = unreached; the oracle replays it as the "
-    "hop-bounded recursive min-label walk.",
+    "synchronous frontier expansion with a fixed 8-round anytime "
+    "contract, hop -1 = unreached: on the driver after one bounded "
+    "collect when the edge list fits under the broadcast threshold, "
+    "else (also for float ids or a threshold of -1) one keyed join + "
+    "settled-set anti-join per round, lazy per-round checkpoints "
+    "materialized by the emptiness count. The oracle replays it as "
+    "the hop-bounded recursive min-label walk.",
 )
 def q_supplier_bfs_hops(spark, sf_dir):
     return graph.bfs_hops(

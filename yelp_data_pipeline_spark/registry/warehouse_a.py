@@ -838,7 +838,10 @@ r{t} AS (
     "THESE buyers'). Exact integer arithmetic, bit-identical to the "
     "unrolled DuckDB replay; per iteration ONE edges⋈ranks shuffle + "
     "ONE dst aggregate; seed flags attached to the persisted node "
-    "relation once; lineage cut per round.",
+    "relation once; lineage cut per round. Edge and seed lists under "
+    "the broadcast threshold run the same steps on the driver after "
+    "one bounded collect each; a rank past the long range, float ids "
+    "or a threshold of -1 keep the distributed loop.",
 )
 def q_personalized_pagerank_nation(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -2415,11 +2418,14 @@ a{t} AS MATERIALIZED (SELECT u AS node FROM d{t} WHERE core_deg >= {k})""")
     "graph-side density screen (spam rings / bot cliques in a "
     "curation pipeline). Anytime contract like pagerank: both engines "
     "run exactly 8 peel rounds; peeling is monotone so early "
-    "convergence equals the full unroll. Per round ONE survivor "
-    "semi-join + ONE map-side-combinable degree count; survivor "
-    "lineage cut every round (lazy localCheckpoint, materialized by "
-    "the round's convergence count); edges "
-    "symmetrize + dedup once, persisted across rounds.",
+    "convergence equals the full unroll. An edge list under the "
+    "broadcast threshold is collected once and peeled on the driver "
+    "(one bounded collect instead of ~15 round jobs); a larger one, "
+    "float ids, or a threshold of -1 run the distributed loop: per "
+    "round ONE survivor semi-join + ONE map-side-combinable degree "
+    "count, survivor lineage cut every round (lazy localCheckpoint, "
+    "materialized by the round's convergence count), edges "
+    "symmetrized + deduped once and persisted across rounds.",
 )
 def q_supplier_kcore(spark, sf_dir):
     return graph.kcore_peel(
@@ -2610,7 +2616,10 @@ def q_event_sequence_motifs(spark, sf_dir):
     "sums; node count is one driver scalar (the CC per-round count "
     "budget), folded in as a literal. Edges dedup "
     "once up front; on a cluster, pre-partition edges by src and "
-    "every iteration reuses the exchange.",
+    "every iteration reuses the exchange. An edge list under the "
+    "broadcast threshold runs the same integer steps on the driver "
+    "after one bounded collect; a rank past the long range, float "
+    "ids or a threshold of -1 keep the distributed loop.",
 )
 def q_pagerank_supplier_graph(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
